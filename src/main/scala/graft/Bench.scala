@@ -1,266 +1,90 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark main (driver contract): runs every declared query against
-  * SPARK_GRAFT_SF_DIR and prints one JSON line.
+import scala.util.control.NonFatal
+
+/** Benchmark main: runs every declared query against SPARK_GRAFT_SF_DIR
+  * and prints one JSON line.
   *
   * Queries are executed through the `noop` sink, not `count()` — count lets
   * Catalyst prune every non-grouping column and skip the aggregate math,
   * which would under-report; noop materializes the full result columns.
+  *
+  * The stdout line carries, in order: `metric` ("total"), `value` (the sum
+  * of the per-query minima, seconds), `unit`, `load_ok`/`load1` (the
+  * start-load fence), `canary_pre`/`canary_post` ({read, write} seconds,
+  * -1 when the canary failed), `queries` (qNN prefix -> min seconds),
+  * `failed` (qNN prefixes of the queries that threw in a timed pass) and
+  * `sf`. `target/bench_last.json` is a copy of that line, and
+  * `target/BENCH_full.json` carries the same run under full query names
+  * with both per-pass readings and each canary's raw `/proc/loadavg`.
+  * Both files are written on full runs only (no SPARK_GRAFT_ONLY). A run
+  * with any failed query exits non-zero after writing them.
+  *
+  * The bench records raw readings only: cross-run comparison, with the
+  * read canary divided out, is the job of the test-scope tool
+  * `graft.tools.DriftReport`.
   */
 object Bench {
 
-  /** Exact median of a non-empty sequence (sorted middle; even count
-    * averages the two middles) — shared by the write-floor window and
-    * the cross-round drift ratio.
+  /** Per-query minimum seconds, in declaration order, of the queries that
+    * completed in every timed pass, and the names of those that threw in
+    * any pass. A failure's time-to-exception is not a timing: it enters
+    * neither `queries` nor `total`.
     */
-  private[graft] def median(xs: Seq[Double]): Double = {
-    require(xs.nonEmpty, "median of empty seq")
-    val s = xs.sorted
-    val n = s.size
-    if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
+  private[graft] final case class Timings(queries: Seq[(String, Double)],
+      failed: Seq[String]) {
+    def total: Double = queries.map(_._2).sum
   }
 
-  /** Regime adjudication, pure so the spec pins the table (see main for
-    * the signal rationale): `unknown` on a failed READ canary,
-    * `inflated` on a failed start-load fence / post-canary degradation
-    * (read >30% or write >50% over pre — the r14 evening band was
-    * WRITE-side D-state flush with healthy reads, so the write canary
-    * participates; its threshold is wider because fsync timing is
-    * noisier) / same-container READ floor >30% over baseline,
-    * `write-degraded` on a same-container write floor >1.75× the median
-    * of the rolling write WINDOW (see below), `shifted` on a DIFFERENT
-    * container whose stable READ floor is >15% off the baseline
-    * (container comparison stays read-only: the read canary is the
-    * stable axis the r15 swap was adjudicated on), else `healthy`.
-    *
-    * The write floor compares against a rolling WINDOW (the last ≤5
-    * write canaries from read-healthy runs), not a ratchet-down floor:
-    * a ratchet traps a lucky-low first adoption (writeback absorbing
-    * all four baseline-run writes) as permanent inflation with no heal
-    * path, while NO floor leaves steady whole-run write degradation
-    * invisible (the r16 blind spot — VERDICT r16 #2). The window gives
-    * both: a lucky-low first entry is diluted as honest runs append
-    * (flagged runs still append — that IS the self-heal), and a steady
-    * 2× degradation against an honest window is flagged for the next
-    * few runs before the window accepts the new floor as the host's
-    * reality. `write-degraded` is distinct from `inflated` so the read
-    * floor ratchet and the drift reference stay usable on such runs.
-    * The in-run post-vs-pre signal is unchanged and baseline-free.
-    * A failed write canary (-1) simply drops the write signals — reads
-    * alone still classify.
-    *
-    * `baseline` is (boot_id, read, write window) from
-    * BENCH_canary_baseline.json, already filtered to the matching sf.
-    * An EMPTY local bootId means the container identity is unreadable —
-    * floor adjudication is skipped entirely (treated as no-baseline)
-    * rather than mislabeling a same-container run as `shifted` through
-    * the cross-container branch.
+  /** One timed pass over `queries` through the noop sink: seconds per
+    * query that completed. A query that throws is reported on stderr and
+    * is absent from the map. The pass starts on a clean heap so the
+    * previous pass's garbage doesn't bill a major GC to whichever query
+    * trips it.
     */
-  private[graft] def classifyRegime(loadOk: Boolean, preRead: Double,
-      postRead: Double, baseline: Option[(String, Double, Seq[Double])],
-      bootId: String, preWrite: Double = -1.0,
-      postWrite: Double = -1.0): String =
-    if (preRead < 0 || postRead < 0) "unknown"
-    else {
-      val readMin = math.min(preRead, postRead)
-      val writeOk = preWrite >= 0 && postWrite >= 0
-      val degraded = postRead > preRead * 1.3 ||
-        (writeOk && postWrite > preWrite * 1.5)
-      if (!loadOk || degraded) "inflated"
-      else (if (bootId.isEmpty) None else baseline) match {
-        case Some((bid, bread, wwin)) if bid == bootId && bid.nonEmpty =>
-          if (readMin > bread * 1.3) "inflated"
-          else if (writeOk && wwin.nonEmpty &&
-            math.min(preWrite, postWrite) > median(wwin) * 1.75)
-            "write-degraded"
-          else "healthy"
-        case Some((_, bread, _)) =>
-          if (math.abs(readMin - bread) / bread > 0.15) "shifted"
-          else "healthy"
-        case None => "healthy"
+  private[graft] def timedPass(spark: SparkSession, sfDir: String,
+      queries: Seq[GraftQuery]): Map[String, Double] = {
+    System.gc()
+    queries.flatMap { q =>
+      val t0 = System.nanoTime()
+      try {
+        q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
+        Some(q.name -> (System.nanoTime() - t0) / 1e9)
+      } catch {
+        case NonFatal(e) =>
+          System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
+          None
       }
-    }
-
-  /** Cross-round drift: shared-query median time ratio vs the previous
-    * committed artifact, with the read-canary ratio divided out so
-    * host-floor movement and code regression separate (VERDICT r16 #1:
-    * the r16 driver artifact read `healthy` at a judge-computed 1.235
-    * median over r15 because the canaries moved in lockstep — the
-    * classifier could not say so itself).
-    *
-    * `median` is the exact median of cur/prev over the shared query
-    * names (additions/removals drop out), `canary` = curRead/prevRead
-    * (the two runs' min-of-pre/post read canaries), `residual` =
-    * median/canary — drift the canary does NOT explain. Verdicts:
-    *   - `no-prior`: <20 shared queries (no reference worth a verdict);
-    *   - `stable`: median ≤ 1.15 (improvements included — residual is
-    *     still reported, so a host speedup masking a code slowdown is
-    *     visible in the artifact even though wall time rules the label);
-    *   - `drifted-unadjudicated`: median > 1.15 with no canary on one
-    *     side — drift is real but host/code cannot be separated;
-    *   - `drifted-host`: median > 1.15 and residual ≤ 1.15 (the canary
-    *     moved with the tail — weather, not code);
-    *   - `drifted-code`: median > 1.15 and residual > 1.15.
-    *
-    * `movers`/`top` close the median's localized blind spot (VERDICT
-    * r17 #1): a single query regressing 5× while 262 stay flat leaves
-    * the median at 1.0 — verdict `stable` — and before r18 the
-    * artifact carried no signal at all; the reader had to run
-    * DriftReport by hand. `movers` counts the shared queries whose
-    * CANARY-NORMALIZED ratio (ratio ÷ canary when both canaries exist,
-    * the raw ratio otherwise) exceeds 1.5×, and `top` names the worst
-    * ≤3 with their normalized ratios, so the artifact itself says
-    * "stable, movers:1 [qXX 5.0x]". Normalizing by the canary keeps a
-    * uniform host slowdown from manufacturing 263 phantom movers; the
-    * flip side (a host SPEEDUP inflating normalized ratios of queries
-    * that don't track I/O) is why the threshold sits at 1.5×, well
-    * above the 1.15 the verdict bands use.
-    */
-  private[graft] final case class Drift(n: Int, median: Double,
-      canary: Double, residual: Double, verdict: String,
-      movers: Int = 0, top: Seq[(String, Double)] = Nil)
-
-  /** Parse BENCH_canary_baseline.json (the committed regime reference).
-    * Returns (boot_id, read floor, write window) when the record's sf
-    * matches, else None. Tolerates both the window format
-    * (`"write_window":[..]`, possibly empty — a run whose write canary
-    * failed still records its read floor) and the legacy single-value
-    * `"write":W` (read as a 1-entry window). Pure and spec-pinned: a
-    * silent parse regression here would permanently disable floor
-    * adjudication — the same failure class as the writeMin gate the
-    * r16 advisor flagged.
-    */
-  private[graft] def parseBaseline(text: String,
-      sfDir: String): Option[(String, Double, Seq[Double])] = try {
-    val head = (""""boot_id":"([^"]*)".*?"read":([0-9.]+)""").r
-    val sfRe = (""""sf":"([^"]*)"""").r
-    val winRe = (""""write_window":\[([0-9.,\s]*)\]""").r
-    val legacyRe = (""""write":([0-9.]+)""").r
-    for {
-      m <- head.findFirstMatchIn(text)
-      s <- sfRe.findFirstMatchIn(text) if s.group(1) == sfDir
-    } yield {
-      val win = winRe.findFirstMatchIn(text) match {
-        case Some(w) => w.group(1).split(",").map(_.trim)
-          .filter(_.nonEmpty).map(_.toDouble).toSeq
-        case None => legacyRe.findFirstMatchIn(text)
-          .map(w => Seq(w.group(1).toDouble)).getOrElse(Seq.empty)
-      }
-      (m.group(1), m.group(2).toDouble, win)
-    }
-  } catch { case _: Throwable => None }
-
-  /** Parse BENCH_prev.json (the committed drift reference): that run's
-    * min read canary plus its full-name per-query minima. None when the
-    * record's sf mismatches (the times mean nothing across scales) or
-    * the queries section is missing. Field order contract, pinned with
-    * the writer by the round-trip spec: `read` immediately follows
-    * `boot_id` (the regex is ANCHORED to that pair, so a future field
-    * merely containing the substring `"read":` cannot shadow it —
-    * ADVICE r17), and `queries` is the LAST field — everything after
-    * `"queries":{` is name/number pairs.
-    */
-  private[graft] def parsePrev(text: String,
-      sfDir: String): Option[(Double, Map[String, Double])] = try {
-    val sfRe = (""""sf":"([^"]*)"""").r
-    if (!sfRe.findFirstMatchIn(text).exists(_.group(1) == sfDir)) None
-    else {
-      val read = (""""boot_id":"[^"]*","read":([0-9.-]+)""").r
-        .findFirstMatchIn(text)
-        .map(_.group(1).toDouble).getOrElse(-1.0)
-      val qsec = text.substring(text.indexOf("\"queries\":{"))
-      val qs = ("\"([^\"]+)\":([0-9.]+)").r.findAllMatchIn(qsec)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      if (qs.isEmpty) None else Some((read, qs))
-    }
-  } catch { case _: Throwable => None }
-
-  /** sf write-guard for BOTH committed reference files (r18, found
-    * live when this round's sf0.001 bench smoke silently REPLACED the
-    * driver's sf0.1 baseline and drift reference): a run may adopt or
-    * refresh a committed reference only when the existing record is
-    * for the SAME sf — or no record exists at all. A mismatched-sf
-    * record correctly parses as None for ADJUDICATION (the times mean
-    * nothing across scales), but "no usable reference" must not mean
-    * "mine now": the smoke run would trade the real reference for its
-    * own, and the next driver run at the canonical sf would see
-    * no-prior/adopt-new against smoke-scale numbers. An intentional sf
-    * migration deletes the two files instead. Missing files and
-    * records without an `sf` field are compatible (fail-open: there is
-    * nothing worth protecting).
-    */
-  private[graft] def sfCompatible(path: java.nio.file.Path,
-      sfDir: String): Boolean = (try {
-    (""""sf":"([^"]*)"""").r.findFirstMatchIn(
-      new String(java.nio.file.Files.readAllBytes(path))).map(_.group(1))
-  } catch { case _: Throwable => None }).forall(_ == sfDir)
-
-  private[graft] def classifyDrift(prev: Map[String, Double],
-      cur: Map[String, Double], prevRead: Double,
-      curRead: Double): Drift = {
-    val named = prev.keysIterator
-      .filter(k => prev(k) > 0 && cur.get(k).exists(_ >= 0))
-      .map(k => k -> cur(k) / prev(k)).toSeq
-    val ratios = named.map(_._2)
-    if (ratios.size < 20) Drift(ratios.size, -1, -1, -1, "no-prior")
-    else {
-      val med = median(ratios)
-      val canary =
-        if (prevRead > 0 && curRead > 0) curRead / prevRead else -1.0
-      val residual = if (canary > 0) med / canary else -1.0
-      val verdict =
-        if (med <= 1.15) "stable"
-        else if (canary < 0) "drifted-unadjudicated"
-        else if (residual <= 1.15) "drifted-host"
-        else "drifted-code"
-      // localized movers: canary-normalized so a uniform host band
-      // doesn't read as 263 regressions (scaladoc above)
-      val normed = named.map { case (k, r) =>
-        k -> (if (canary > 0) r / canary else r) }
-      val moved = normed.filter(_._2 > 1.5).sortBy(-_._2)
-      Drift(ratios.size, med, canary, residual, verdict,
-        moved.size, moved.take(3))
-    }
+    }.toMap
   }
 
-  /** The drift-reference adoption rule, factored pure so the spec can
-    * pin it (same ghost-rule class as the parsers). Auto-adoption
-    * requires a healthy regime AND a verdict of no-prior or stable
-    * WITH ZERO MOVERS: a stable median with a named localized
-    * regression must not become the next reference — one adoption
-    * would normalize exactly the single-query case the movers field
-    * exists to surface (review r18). The forced override (the
-    * documented escape hatch after an intentional perf-profile change)
-    * bypasses the verdict but NOT the regime/sf guards, which the
-    * caller applies around this. */
-  private[graft] def shouldAdoptPrev(regime: String, drift: Drift,
-      forceAdopt: Boolean): Boolean =
-    forceAdopt ||
-      (regime == "healthy" &&
-        (drift.verdict == "no-prior" ||
-          (drift.verdict == "stable" && drift.movers == 0)))
+  /** Folds the timed passes over the queries `names` into [[Timings]]. */
+  private[graft] def minima(names: Seq[String],
+      passes: Seq[Map[String, Double]]): Timings = {
+    val (ok, failed) = names.partition(n => passes.forall(_.contains(n)))
+    Timings(ok.map(n => n -> passes.map(_(n)).min), failed)
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Probe mode: SPARK_GRAFT_ONLY=qB7,q28 restricts the run to the named
     // queries (short qNN prefixes or full names) — for steady-state
-    // regression probes without paying the full-suite wall time. The
-    // driver never sets it, so round artifacts are always the full set.
+    // regression probes without paying the full-suite wall time.
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     // Load fence: a benchmark started on an already-busy host measures
     // the neighbors, not the engine (two past round artifacts recorded
     // 1.3-3.4x phantom regressions that vanished on an idle re-run).
-    // Record the 1-min load average at start and flag the artifact —
-    // readings taken with load_ok=false should be discarded in favor of
-    // SCALE.md's clean-run numbers.
-    val load1 = try {
-      java.lang.management.ManagementFactory.getOperatingSystemMXBean
-        .getSystemLoadAverage
-    } catch { case _: Throwable => -1.0 }
+    // Record the 1-min load average at start (-1 where the OS has none)
+    // and flag the artifact — readings taken with load_ok=false should
+    // be discarded in favor of SCALE.md's clean-run numbers.
+    val load1 = java.lang.management.ManagementFactory
+      .getOperatingSystemMXBean.getSystemLoadAverage
     val nCpu = Runtime.getRuntime.availableProcessors
     // idle threshold: anything over half the cores already running when
     // the bench starts will contend with the 32 task threads
@@ -285,24 +109,21 @@ object Bench {
     // /proc/loadavg, captured BEFORE the warmup and AFTER the last
     // timed pass. A band where the canaries and the trivial tail
     // inflate uniformly is host weather; a regression confined to
-    // specific queries with flat canaries is code. This makes
-    // dual-band adjudication self-contained in the artifact (r14
-    // needed a manual vmstat session).
+    // specific queries with flat canaries is code. DriftReport divides
+    // the read canary out when it compares two artifacts.
     def loadavg(): String = try {
-      new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/loadavg"))).trim
-    } catch { case _: Throwable => "" }
+      new String(Files.readAllBytes(Paths.get("/proc/loadavg"))).trim
+    } catch { case NonFatal(_) => "" } // no /proc off Linux: record none
     def canary(): (Double, Double, String) = {
       // a FAILED canary must record -1, not its time-to-exception: a
-      // fast failure reads as "healthy I/O" and flips the dual-band
-      // adjudication to exactly the wrong verdict
+      // fast failure would read as healthy I/O
       def readOnce(): Double = {
         val t0 = System.nanoTime()
         try {
           spark.read.parquet(s"$sfDir/lineitem.parquet")
             .write.format("noop").mode("overwrite").save()
           (System.nanoTime() - t0) / 1e9
-        } catch { case _: Throwable => -1.0 }
+        } catch { case NonFatal(_) => -1.0 }
       }
       def writeOnce(): Double = {
         val t0 = System.nanoTime()
@@ -312,7 +133,7 @@ object Bench {
               "CAST(id AS STRING) AS s")
             .write.mode("overwrite").parquet("target/bench_canary.parquet")
           (System.nanoTime() - t0) / 1e9
-        } catch { case _: Throwable => -1.0 }
+        } catch { case NonFatal(_) => -1.0 }
       }
       def minOk(a: Double, b: Double): Double =
         if (a < 0 || b < 0) -1.0 else math.min(a, b)
@@ -340,228 +161,70 @@ object Bench {
       // un-warmed queries just measure slightly colder
       if (System.nanoTime() < warmDeadline) {
         try q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
+        catch { case NonFatal(_) => () } // the timed passes record it
       }
     }
 
     // Two timed passes, per-query minimum: transient host-level stalls
     // (GC, scheduler, VM neighbors) land on random queries and inflate a
     // single pass by up to 30%; the min of two independent passes is the
-    // steady-state throughput the engine actually sustains. Each pass
-    // starts on a clean heap so the previous pass's garbage doesn't
-    // bill a major GC to whichever query trips it.
-    def timedPass(): Seq[(String, Double)] = {
-      System.gc()
-      benchQueries.map { q =>
-        val t0 = System.nanoTime()
-        try q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
-        }
-        q.name -> (System.nanoTime() - t0) / 1e9
-      }
-    }
-    val p1 = timedPass().toMap
+    // steady-state throughput the engine actually sustains.
+    val p1 = timedPass(spark, sfDir, benchQueries)
     // On a healthy host pass 1 sums to well under 2s/query; if the
     // machine is badly degraded, skip the refinement pass rather than
     // risk the harness's wall budget — min-of-one is just pass 1.
-    val p2 = if (p1.values.sum < nQueries * 2.0) timedPass().toMap else p1
+    val p2 =
+      if (p1.values.sum < nQueries * 2.0) timedPass(spark, sfDir, benchQueries)
+      else p1
     val canaryPost = canary()
+    val timings = minima(benchQueries.map(_.name), Seq(p1, p2))
 
-    // Regime self-classification (VERDICT r15 #5): the artifact carries
-    // its own verdict, so a band shift needs no judge-side vmstat
-    // archaeology. Signals (full table in classifyRegime's scaladoc):
-    //   - inflated: failed start-load fence, in-run canary degradation
-    //     (the host changed DURING the run; the opposite direction is
-    //     just JIT warm-in — the pre canary runs on a cold JVM and is
-    //     systematically slower), or — same container as the recorded
-    //     baseline — a read floor >30% above it.
-    //   - write-degraded: same container, read-side healthy, but the
-    //     write floor sits >1.75x the median of the rolling write
-    //     window (steady flush-side degradation — the r16 blind spot).
-    //   - shifted: a DIFFERENT container (boot_id) whose stable read
-    //     floor differs >15% from the recorded baseline — the r15 swap
-    //     case: container drift, compare ratios not absolutes.
-    //   - healthy: everything else.
-    // The baseline is a COMMITTED file {boot_id, read, write_window}
-    // refreshed from non-inflated full runs on each container, so the
-    // next artifact on the same host classifies against a measured
-    // reference rather than its own run.
-    val bootId = try {
-      new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-        "/proc/sys/kernel/random/boot_id"))).trim
-    } catch { case _: Throwable => "" }
-    // the read canary scans $sfDir/lineitem, so a baseline only means
-    // something at the SAME sf — a mismatched record is ignored and
-    // (on a healthy run) replaced
-    val basePath = java.nio.file.Paths.get("BENCH_canary_baseline.json")
-    val baseline: Option[(String, Double, Seq[Double])] = try {
-      parseBaseline(
-        new String(java.nio.file.Files.readAllBytes(basePath)), sfDir)
-    } catch { case _: Throwable => None }
-    val readPair = Seq(canaryPre._1, canaryPost._1)
-    val regime: String =
-      classifyRegime(loadOk, canaryPre._1, canaryPost._1, baseline, bootId,
-        canaryPre._2, canaryPost._2)
-    // refresh rules: adopt the floor on the first non-inflated full run
-    // of a container (recording the shift is the artifact's job — the
-    // regime field flags it once), then RATCHET DOWN the read floor on
-    // any later run with a lower one, so a first run that happened to
-    // be stably degraded self-heals instead of poisoning the baseline
-    // forever. The write WINDOW appends the run's write floor on every
-    // read-healthy run (write-degraded runs included — that append IS
-    // the window's self-heal; read-inflated runs are neighbor storms
-    // and contribute nothing), keeping the last 5. A failed write
-    // canary (-1) is never written — but it no longer blocks the READ
-    // floor from being adopted or ratcheted (a host whose write canary
-    // persistently fails would otherwise never get a baseline at all).
-    val readMin = readPair.min
-    val writeMin = Seq(canaryPre._2, canaryPost._2).min
-    val adoptNew = !baseline.exists(_._1 == bootId)
-    val regimeOkForBase = regime != "inflated" && regime != "unknown"
-    val (keepRead, keepWin) = baseline match {
-      case Some((bid, br, bw)) if bid == bootId =>
-        (math.min(readMin, br),
-          if (writeMin >= 0) (bw :+ writeMin).takeRight(5) else bw)
-      case _ =>
-        (readMin, if (writeMin >= 0) Seq(writeMin) else Seq.empty[Double])
-    }
-    val changed = baseline match {
-      case Some((bid, br, bw)) if bid == bootId =>
-        keepRead < br || keepWin != bw
-      case _ => true
-    }
-    val refresh = only.isEmpty && regimeOkForBase && bootId.nonEmpty &&
-      (adoptNew || changed) && sfCompatible(basePath, sfDir)
+    // The stdout line has been read from a 2000-char log tail (BENCH_r03's
+    // "tail" field is exactly 2000 chars). 3-decimal values plus
+    // qNN-prefix keys keep it compact; the intact artifact is the file
+    // twin below. Full query names remain in CORRECTNESS_r*.json; qNN is
+    // the unique prefix of each.
+    def short(name: String): String = name.takeWhile(_ != '_')
+    require(benchQueries.map(q => short(q.name)).distinct.size == nQueries,
+      "bench short keys collide — fix query numbering")
     def fmt(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    if (refresh) {
-      try java.nio.file.Files.writeString(basePath,
-        s"""{"boot_id":"$bootId","read":${fmt(keepRead)},""" +
-          s""""write_window":[${keepWin.map(fmt).mkString(",")}],""" +
-          s""""sf":"$sfDir"}""" + "\n")
-      catch { case _: Throwable => () }
-    }
-
-    val results = benchQueries
-      .map(q => q.name -> math.min(p1(q.name), p2(q.name)))
-
-    // Cross-round drift (VERDICT r16 #1): compare this run's per-query
-    // times against the previous committed reference artifact
-    // (BENCH_prev.json: full query names + that run's read canary) and
-    // divide out the canary ratio, so the artifact itself says whether
-    // a band move is host weather or code. The reference refreshes only
-    // from stable healthy runs (a drifted-code run must not normalize
-    // itself; a drifted-host run would make the next comparison
-    // weather-vs-weather) — SPARK_GRAFT_ADOPT_PREV=1 forces adoption
-    // after an intentional perf-profile change.
-    val prevPath = java.nio.file.Paths.get("BENCH_prev.json")
-    val prevParsed: Option[(Double, Map[String, Double])] = try {
-      parsePrev(
-        new String(java.nio.file.Files.readAllBytes(prevPath)), sfDir)
-    } catch { case _: Throwable => None }
-    val drift: Drift = prevParsed match {
-      case Some((pRead, pQs)) =>
-        classifyDrift(pQs, results.toMap, pRead, readMin)
-      case None => Drift(0, -1, -1, -1, "no-prior")
-    }
-    // the forced override still requires a non-inflated regime (ADVICE
-    // r17): a forced adoption during a neighbor storm would poison the
-    // next round's drift comparison with weather, exactly what the
-    // stable+healthy rule exists to prevent
-    val forceAdopt = sys.env.get("SPARK_GRAFT_ADOPT_PREV").contains("1")
-    if (forceAdopt && !regimeOkForBase)
-      System.err.println(s"[bench] WARNING: SPARK_GRAFT_ADOPT_PREV=1 " +
-        s"REFUSED — regime '$regime' would poison the drift reference; " +
-        "re-run on an idle host")
-    if (forceAdopt && !sfCompatible(prevPath, sfDir))
-      System.err.println("[bench] WARNING: SPARK_GRAFT_ADOPT_PREV=1 " +
-        s"REFUSED — committed BENCH_prev.json is for a different sf " +
-        s"than $sfDir; an intentional sf migration deletes " +
-        "BENCH_prev.json and BENCH_canary_baseline.json first")
-    val adoptPrev = only.isEmpty && regimeOkForBase &&
-      sfCompatible(prevPath, sfDir) &&
-      shouldAdoptPrev(regime, drift, forceAdopt)
-    if (!forceAdopt && regime == "healthy" && drift.verdict == "stable" &&
-        drift.movers > 0)
-      System.err.println(s"[bench] drift reference NOT adopted: verdict " +
-        s"stable but ${drift.movers} mover(s) named " +
-        s"(${drift.top.map(t => s"${t._1} ${t._2}x").mkString(", ")}) — " +
-        "adopting would normalize a localized regression")
-    if (adoptPrev) {
-      try {
-        val qsJson = results.map { case (k, v) => s""""$k":${fmt(v)}""" }
-          .mkString("{", ",", "}")
-        java.nio.file.Files.writeString(prevPath,
-          s"""{"boot_id":"$bootId","read":${fmt(readMin)},""" +
-            s""""total":${fmt(results.map(_._2).sum)},"sf":"$sfDir",""" +
-            s""""queries":$qsJson}""" + "\n")
-      } catch { case _: Throwable => () }
-    }
-
-    // The driver parses this line from a 2000-char log tail (measured:
-    // BENCH_r03's "tail" field is exactly 2000 chars and all three rounds
-    // recorded "parsed": null). 3-decimal values plus qNN-prefix keys keep
-    // the query map compact; the intact artifact is the file twin below.
-    // Full query names remain in CORRECTNESS_r*.json; qNN is the unique
-    // prefix of each.
-    require(results.map(_._1.takeWhile(_ != '_')).distinct.size ==
-      results.size, "bench short keys collide — fix query numbering")
-    val qs = results.map { case (k, v) =>
-      "\"" + k.takeWhile(_ != '_') + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    // stdout stays numeric-compact (2000-char tail window); the raw
-    // loadavg strings live in the file twin below
+    def names(ns: Seq[String]): String =
+      ns.map("\"" + _ + "\"").mkString("[", ",", "]")
+    // stdout stays numeric-compact; the raw loadavg strings live in the
+    // file twin below
     def canaryJson(c: (Double, Double, String), full: Boolean): String =
       s"""{"read":${fmt(c._1)},"write":${fmt(c._2)}""" +
         (if (full) s""","loadavg":"${c._3}"}""" else "}")
-    val topJson = drift.top
-      .map { case (q, x) => s"""["$q",${fmt(x)}]""" }.mkString("[", ",", "]")
-    val driftJson =
-      s"""{"n":${drift.n},"median":${fmt(drift.median)},""" +
-        s""""canary":${fmt(drift.canary)},""" +
-        s""""residual":${fmt(drift.residual)},""" +
-        s""""movers":${drift.movers},"top":$topJson,""" +
-        s""""verdict":"${drift.verdict}"}"""
+    val qs = timings.queries.map { case (k, v) =>
+      "\"" + short(k) + "\":" + fmt(v) }.mkString("{", ",", "}")
     val json =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
-        s""""load_ok":$loadOk,"load1":${fmt(load1)},"regime":"$regime",""" +
-        s""""drift":$driftJson,""" +
+      s"""{"metric":"total","value":${fmt(timings.total)},"unit":"sec",""" +
+        s""""load_ok":$loadOk,"load1":${fmt(load1)},""" +
         s""""canary_pre":${canaryJson(canaryPre, full = false)},""" +
         s""""canary_post":${canaryJson(canaryPost, full = false)},""" +
-        s""""queries":$qs,"sf":"$sfDir"}"""
+        s""""queries":$qs,"failed":${names(timings.failed.map(short))},""" +
+        s""""sf":"$sfDir"}"""
     println(json)
-    // File twin of the stdout contract: the driver captures stdout from a
-    // 2000-char log tail, which has truncated the artifact three rounds
-    // running ("parsed": null + a cut-off summary). target/BENCH_full.json
-    // carries the SAME two-run minima under FULL query names plus both
-    // per-pass readings, so adjudication can always read an intact
-    // artifact off disk. Full runs only — a SPARK_GRAFT_ONLY probe can't
-    // clobber the last full-suite numbers.
+    // File twin of the stdout line: the same two-pass minima under FULL
+    // query names plus both per-pass readings, so a reader never depends
+    // on a truncated log tail. Full runs only — a SPARK_GRAFT_ONLY probe
+    // can't clobber the last full-suite numbers.
     if (only.isEmpty) {
-      val fullQs = results.map { case (k, v) =>
+      val fullQs = timings.queries.map { case (k, v) =>
         s""""$k":{"min":${fmt(v)},"p1":${fmt(p1(k))},"p2":${fmt(p2(k))}}"""
       }.mkString("{", ",", "}")
       val fullJson =
-        s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
+        s"""{"metric":"total","value":${fmt(timings.total)},"unit":"sec",""" +
           s""""load_ok":$loadOk,"load1":${fmt(load1)},""" +
-          s""""regime":"$regime","boot_id":"$bootId",""" +
-          s""""drift":$driftJson,"prev_adopted":$adoptPrev,""" +
-          baseline.map { case (bid, br, bw) =>
-            s""""canary_baseline":{"boot_id":"$bid","read":${fmt(br)},""" +
-              s""""write_window":[${bw.map(fmt).mkString(",")}]},""" }
-            .getOrElse("") +
           s""""canary_pre":${canaryJson(canaryPre, full = true)},""" +
           s""""canary_post":${canaryJson(canaryPost, full = true)},""" +
-          s""""n_queries":$nQueries,"queries":$fullQs,"sf":"$sfDir"}"""
-      try {
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get("target/bench_last.json"), json)
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get("target/BENCH_full.json"), fullJson)
-      } catch { case _: Throwable => () }
+          s""""n_queries":$nQueries,"queries":$fullQs,""" +
+          s""""failed":${names(timings.failed)},"sf":"$sfDir"}"""
+      Files.createDirectories(Paths.get("target"))
+      Files.writeString(Paths.get("target/bench_last.json"), json)
+      Files.writeString(Paths.get("target/BENCH_full.json"), fullJson)
     }
     spark.stop()
+    if (timings.failed.nonEmpty) sys.exit(1)
   }
 }

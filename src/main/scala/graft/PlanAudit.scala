@@ -9,6 +9,20 @@ import org.apache.spark.sql.SparkSession
   * Usage: runMain graft.PlanAudit [sfDir] [queryName ...]
   */
 object PlanAudit {
+
+  /** `PLAN_CONF` ("k=v,k2=v2") as (key, value) pairs, split on each
+    * entry's first `=`. Empty entries are skipped; an entry without `=`
+    * fails naming it.
+    */
+  private[graft] def parseConf(spec: String): Seq[(String, String)] =
+    spec.split(",").map(_.trim).filter(_.nonEmpty).toSeq.map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) => k.trim -> v.trim
+        case _ => throw new IllegalArgumentException(
+          s"PLAN_CONF entry '$kv' has no '=' (expected k=v,k2=v2)")
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val wanted = if (args.length > 1) args.drop(1).toSet else Set.empty[String]
@@ -24,9 +38,8 @@ object PlanAudit {
     // PLAN_CONF="k=v,k2=v2": session confs for the audited plans —
     // lets a conf-gated optimization dump its before shape (e.g.
     // graft.scan.parallelismFloor=0)
-    sys.env.get("PLAN_CONF").foreach(_.split(",").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      spark.conf.set(k.trim, v.trim)
+    sys.env.get("PLAN_CONF").foreach(parseConf(_).foreach {
+      case (k, v) => spark.conf.set(k, v)
     })
 
     SparkEntry.allQueries

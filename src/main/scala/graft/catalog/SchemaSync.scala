@@ -419,6 +419,15 @@ object ConnectorSink {
                 "is not a sink-created staging table (missing the " +
                 "graft.ow_staging marker) — rename or drop it first")
           spark.sql(s"DROP TABLE IF EXISTS $staging")
+          // a failed write's straggler task can re-create the staging
+          // location after the job abort and the drop removed it (its
+          // commit races the abort), and CREATE then refuses with
+          // LOCATION_ALREADY_EXISTS; no table owns that path now
+          val stagingPath = new org.apache.hadoop.fs.Path(
+            spark.sessionState.catalog.defaultTablePath(
+              spark.sessionState.sqlParser.parseTableIdentifier(staging)))
+          stagingPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+            .delete(stagingPath, true)
           val partDdl =
             if (parts.isEmpty) ""
             else parts.map(SchemaSync.quoted)

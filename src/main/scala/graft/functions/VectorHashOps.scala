@@ -234,10 +234,10 @@ object VectorHashOps {
     * expression semantics), while the HOF form's lambda null-drops
     * every element and yields 0 — callers with nullable inputs must
     * coalesce explicitly. The linear HOF filter was measured as the dominant cost of
-    * the codebook quantile rescue (RescueProbe r18: 1023 comparisons
-    * per row across the candidate corpus dwarfed both the quantile
-    * pass and the ranking it rescues); this is the same monotone
-    * bucketing, so ordinals stay exact.
+    * the codebook quantile rescue (the r18 rescue probe, SCALE.md:
+    * 1023 comparisons per row across the candidate corpus dwarfed
+    * both the quantile pass and the ranking it rescues); this is the
+    * same monotone bucketing, so ordinals stay exact.
     */
   def upperBound(cuts: ArrayData, v: Long): Long = {
     var lo = 0

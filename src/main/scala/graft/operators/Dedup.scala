@@ -23,22 +23,6 @@ import graft.plans.Fence
   */
 object Dedup {
 
-  /** Session default for the prefix generators' shingle total order.
-    * df-order (rare-first) is the boilerplate-robust choice and the
-    * default: a corpus-wide hot shingle sorts LAST and exits every
-    * prefix, which is what keeps the candidate volume sub-linear on
-    * boilerplate-heavy corpora (the round-12 ov probe melted value
-    * order at exp 0.88-1.32/decade). Value order skips the df
-    * aggregate + re-rank (one fewer shuffle + window over the shingle
-    * table), worth 10-30% at query grain on corpora KNOWN to be
-    * boilerplate-light — opt in per JVM with
-    * `-Dgraft.dedup.valueOrder=true`, or per call via the parameter.
-    * Read per call (a `def`), so an A/B harness can flip it between
-    * runs without recompiling.
-    */
-  private[graft] def dfOrderedDefault: Boolean =
-    !java.lang.Boolean.getBoolean("graft.dedup.valueOrder")
-
   /** Exact dedup: group by content hash, keep the smallest id.
     * Output: text_hash, keep_id, dup_cnt.
     */
@@ -164,7 +148,7 @@ object Dedup {
     */
   def ngramJaccardPrefixPairs(df: DataFrame, idCol: String,
       textCol: String, n: Int, threshold: Double,
-      dfOrdered: Boolean = Dedup.dfOrderedDefault): DataFrame = {
+      dfOrdered: Boolean = true): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       "prefix filtering needs a threshold in (0, 1]")
     import org.apache.spark.sql.expressions.Window
@@ -282,7 +266,7 @@ object Dedup {
     */
   def containmentPrefixPairs(df: DataFrame, idCol: String,
       textCol: String, n: Int, threshold: Double,
-      dfOrdered: Boolean = Dedup.dfOrderedDefault): DataFrame =
+      dfOrdered: Boolean = true): DataFrame =
     containmentPrefixPairsOnSets(
       shingleSets(df, idCol, textCol, n), threshold, dfOrdered)
 
@@ -295,7 +279,7 @@ object Dedup {
     */
   private[graft] def containmentPrefixPairsOnSets(rawSets: DataFrame,
       threshold: Double,
-      dfOrdered: Boolean = Dedup.dfOrderedDefault): DataFrame = {
+      dfOrdered: Boolean = true): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       "prefix filtering needs a threshold in (0, 1]")
     import org.apache.spark.sql.expressions.Window
@@ -392,7 +376,7 @@ object Dedup {
     */
   def containmentPrefixPairsDfGated(df: DataFrame, idCol: String,
       textCol: String, n: Int, threshold: Double, maxDfFrac: Double,
-      dfOrdered: Boolean = Dedup.dfOrderedDefault): DataFrame = {
+      dfOrdered: Boolean = true): DataFrame = {
     require(maxDfFrac > 0.0 && maxDfFrac <= 1.0,
       "maxDfFrac must be in (0, 1]")
     // corpus-sized (per-doc shingle sets), read by the df aggregate
@@ -1231,9 +1215,7 @@ object Dedup {
     // coarse-check waste r12 partly blamed — an interleaved A/B of
     // cap 4|8 still measured qO9 2.63x WORSE at cap 8; the deep lazy
     // 8-round chain itself is the cost, not the convergence check).
-    // `graft.cc.batchCap` stays as the re-measurement knob.
-    val batchCap = spark.conf.getOption("graft.cc.batchCap")
-      .map(_.toInt).getOrElse(4)
+    val batchCap = 4
     var batch = 1
     while (!converged && iter < maxIter) {
       val rounds = math.min(batch, maxIter - iter)
@@ -1277,10 +1259,6 @@ object Dedup {
       Fence.reclaim(stagedLabels)
       stagedLabels = next
       converged = changed.last.value == 0L
-      if (sys.env.contains("GRAFT_STAGE_DEBUG"))
-        System.err.println(
-          s"[cc] batch at iter=$iter rounds=$rounds changed=" +
-            changed.map(_.value).mkString(","))
       // POINTER JUMP between batches: label <- min(label,
       // label(label)) — the shortcut that turns O(diameter) relax
       // rounds into ~O(log d) (HashMin labels only ever point at
@@ -1308,7 +1286,7 @@ object Dedup {
             least(col("component"), coalesce(col("jc"), col("component")))
               .as("component"))
       iter += rounds
-      batch = math.min(batch * 2, math.max(1, batchCap))
+      batch = math.min(batch * 2, batchCap)
     }
     labels
   }

@@ -298,10 +298,10 @@ object Similarity {
       // cuts_bucket is an upper-bound BINARY search (native codegen
       // expression) — the r17 shape computed the same count with a
       // linear HOF filter over the ≤1023-long literal, 1023
-      // comparisons per row, which RescueProbe measured as the
-      // dominant rescue cost (3.5-3.9x the collapsed path it rescues
-      // at 2^22-2^24); log-time bucketing makes the rescue pay what
-      // the scaladoc claims: ~the quantile pass
+      // comparisons per row, which the r18 rescue probe (SCALE.md)
+      // measured as the dominant rescue cost (3.5-3.9x the collapsed
+      // path it rescues at 2^22-2^24); log-time bucketing makes the
+      // rescue pay what the scaladoc claims: ~the quantile pass
       graft.functions.GraftFunctions.registerAll(cands.sparkSession)
       val balanced = cands.select(col("vid")).withColumn("__blk",
         call_function("cuts_bucket", col("vid"),
@@ -311,9 +311,9 @@ object Similarity {
   }
 
   /** `rebalanceFloor` passes through to [[planBlocks]] unchanged by
-    * default; [[graft.tools.RescueProbe]] raises it to force the
-    * uniform path on an adversarial corpus, so the rescue's cost is
-    * measured against the exact code both regimes run.
+    * default; raising it forces the uniform path on an adversarial
+    * corpus, so the rescue's cost can be measured against the exact
+    * code both regimes run (the r18 rescue probe, SCALE.md).
     */
   private[graft] def codebookKept(cands: DataFrame,
       maxCentroids: Int, rebalanceFloor: Long = 1L << 20): DataFrame = {

@@ -134,10 +134,7 @@ object Stage {
   def materialize(df: DataFrame, name: String): DataFrame = {
     val spark = df.sparkSession
     val path = s"${stageRoot(spark)}/$name"
-    val t0 = System.nanoTime()
     df.write.mode("overwrite").parquet(path)
-    if (sys.env.contains("GRAFT_STAGE_DEBUG"))
-      System.err.println(f"[stage] $name ${(System.nanoTime() - t0) / 1e9}%.3f s")
     val back = spark.read.parquet(path)
     stagedFrames.put(back, (path, None))
     back
@@ -167,26 +164,23 @@ object Stage {
   def reclaim(df: DataFrame): Unit = {
     // NonFatal only (ADVICE r12): reclamation is best-effort — the
     // shutdown hook is the backstop — but an OutOfMemoryError or an
-    // interrupt must propagate, and a reclamation that persistently
-    // fails should at least be observable under GRAFT_STAGE_DEBUG
+    // interrupt must propagate, and a reclamation that fails is warned
+    // on stderr so stage storage that stops shrinking is visible
     import scala.util.control.NonFatal
-    def debug(msg: => String): Unit =
-      if (sys.env.contains("GRAFT_STAGE_DEBUG")) System.err.println(msg)
+    def warnFailed(what: String, e: Throwable): Unit =
+      System.err.println(s"[stage] WARNING: reclaim $what failed: $e")
     val entry = stagedFrames.remove(df)
     if (entry != null) {
       val (path, table) = entry
       table.foreach { tbl =>
         try df.sparkSession.sql(s"DROP TABLE IF EXISTS `$tbl`")
-        catch { case NonFatal(e) =>
-          debug(s"[stage] reclaim DROP TABLE $tbl failed: $e") }
+        catch { case NonFatal(e) => warnFailed(s"DROP TABLE $tbl", e) }
       }
       try {
         val p = new Path(path)
         p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
           .delete(p, true)
-        debug(s"[stage] reclaimed $path")
-      } catch { case NonFatal(e) =>
-        debug(s"[stage] reclaim delete $path failed: $e") }
+      } catch { case NonFatal(e) => warnFailed(s"delete $path", e) }
     }
   }
 
@@ -257,14 +251,11 @@ object Stage {
     val path = s"${stageRoot(spark)}/$unique"
     val table = ("graft_stage_" + sessionNs(spark) + "_" + unique)
       .replaceAll("[^a-zA-Z0-9_]", "_")
-    val t0 = System.nanoTime()
     df.repartition(nb, df(bucketCol))
       .write.mode("overwrite")
       .option("path", path)
       .bucketBy(nb, bucketCol)
       .saveAsTable(table)
-    if (sys.env.contains("GRAFT_STAGE_DEBUG"))
-      System.err.println(f"[stage] $unique (bucketed nb=$nb) ${(System.nanoTime() - t0) / 1e9}%.3f s")
     val back = spark.table(table)
     stagedFrames.put(back, (path, Some(table)))
     // POST-WRITE COMPACT for the adaptive path: when the estimate was

@@ -2450,91 +2450,10 @@ class InfraSpec extends SparkTestBase {
       .getAs[Any]("added") == null)
   }
 
-  test("Bench.classifyRegime: the band-adjudication table is pinned") {
-    import graft.Bench.classifyRegime
-    val here = Some(("boot-A", 0.30, Seq(0.40)))
-    // a failed canary must read as unknown, never as healthy I/O
-    assert(classifyRegime(true, -1.0, 0.2, here, "boot-A") == "unknown")
-    assert(classifyRegime(true, 0.2, -1.0, here, "boot-A") == "unknown")
-    // start-load fence
-    assert(classifyRegime(false, 0.3, 0.3, here, "boot-A") == "inflated")
-    // host degrading DURING the run is inflation; the opposite
-    // direction is JIT warm-in (pre canary runs on a cold JVM) and fine
-    assert(classifyRegime(true, 0.3, 0.45, here, "boot-A") == "inflated")
-    assert(classifyRegime(true, 0.45, 0.3, here, "boot-A") == "healthy")
-    // same container with the floor >30% over its recorded baseline:
-    // neighbor weather
-    assert(classifyRegime(true, 0.50, 0.45, here, "boot-A") == "inflated")
-    // the r15 container swap, replayed: new boot_id, stable floor 0.285
-    // vs recorded 0.242 (+18%) => shifted, not a code regression
-    assert(classifyRegime(true, 0.30, 0.285,
-      Some(("boot-old", 0.242, Seq(0.4))), "boot-B") == "shifted")
-    // new container within 15% of the old floor: healthy
-    assert(classifyRegime(true, 0.26, 0.25,
-      Some(("boot-old", 0.242, Seq(0.4))), "boot-B") == "healthy")
-    // no baseline recorded: nothing to adjudicate against
-    assert(classifyRegime(true, 0.9, 0.8, None, "boot-A") == "healthy")
-    // an UNREADABLE container identity must not fall into the
-    // cross-container branch and mislabel a same-host run as shifted
-    // (ADVICE r16): empty bootId skips floor adjudication entirely
-    assert(classifyRegime(true, 0.9, 0.8,
-      Some(("boot-old", 0.242, Seq(0.4))), "") == "healthy")
-    // WRITE-side signals (the r14 evening band: D-state flush load with
-    // healthy reads): in-run write degradation >50% is inflation...
-    assert(classifyRegime(true, 0.3, 0.3, here, "boot-A",
-      preWrite = 0.4, postWrite = 0.7) == "inflated")
-    // ...and a healthy write band changes nothing
-    assert(classifyRegime(true, 0.3, 0.3, here, "boot-A",
-      preWrite = 0.5, postWrite = 0.45) == "healthy")
-    // a FAILED write canary drops the write signals; reads still rule
-    assert(classifyRegime(true, 0.3, 0.3, here, "boot-A",
-      preWrite = -1.0, postWrite = 0.7) == "healthy")
-    // container comparison stays read-only: a new container's different
-    // write floor alone does not flag shifted
-    assert(classifyRegime(true, 0.25, 0.245,
-      Some(("boot-old", 0.242, Seq(0.2))), "boot-B",
-      preWrite = 0.9, postWrite = 0.85) == "healthy")
-
-    // WRITE-FLOOR WINDOW (VERDICT r16 #2): steady whole-run write
-    // degradation against an honest window is flagged — the case the
-    // r16 no-floor design was blind to. Honest window at 0.40, run
-    // writing at 0.80 (a steady 2x): flagged, and still flagged on the
-    // next run after the first degraded value joins the window...
-    val honest = Some(("boot-A", 0.30, Seq(0.40, 0.40, 0.40)))
-    assert(classifyRegime(true, 0.3, 0.3, honest, "boot-A",
-      preWrite = 0.85, postWrite = 0.80) == "write-degraded")
-    assert(classifyRegime(true, 0.3, 0.3,
-      Some(("boot-A", 0.30, Seq(0.40, 0.40, 0.40, 0.80))), "boot-A",
-      preWrite = 0.85, postWrite = 0.80) == "write-degraded")
-    // ...and a LUCKY-LOW first adoption (writeback absorbed the
-    // baseline run's flushes) self-heals: the first honest run is
-    // flagged once, but because flagged runs still append, the window
-    // median moves and the same honest floor reads healthy two runs
-    // later — the trap the removed ratchet-down floor could never
-    // escape (VERDICT r16 What's-wrong #2)
-    assert(classifyRegime(true, 0.3, 0.3,
-      Some(("boot-A", 0.30, Seq(0.10))), "boot-A",
-      preWrite = 0.42, postWrite = 0.40) == "write-degraded")
-    assert(classifyRegime(true, 0.3, 0.3,
-      Some(("boot-A", 0.30, Seq(0.10, 0.40))), "boot-A",
-      preWrite = 0.42, postWrite = 0.40) == "healthy")
-    // an empty window (every prior write canary failed) adjudicates
-    // nothing; a failed write canary on THIS run likewise
-    assert(classifyRegime(true, 0.3, 0.3,
-      Some(("boot-A", 0.30, Seq.empty)), "boot-A",
-      preWrite = 0.9, postWrite = 0.85) == "healthy")
-    assert(classifyRegime(true, 0.3, 0.3, honest, "boot-A",
-      preWrite = -1.0, postWrite = 0.9) == "healthy")
-    // read-side signals outrank the window: a read-inflated run is
-    // inflated even when its writes also breach the window
-    assert(classifyRegime(true, 0.50, 0.45, honest, "boot-A",
-      preWrite = 0.85, postWrite = 0.80) == "inflated")
-  }
-
   test("Bench.classifyDrift: cross-round drift separates host weather " +
     "from code regression, pinned on the real r15/r16 artifacts " +
     "(VERDICT r16 #1)") {
-    import graft.Bench.{classifyDrift, Drift}
+    import graft.tools.DriftReport.{classifyDrift, Drift}
     // the REAL motivating case: the r16 driver artifact read `healthy`
     // while sitting at a judge-computed 1.235 median over r15's shared
     // tail queries, because the canaries moved in lockstep. Re-derive
@@ -2594,7 +2513,7 @@ class InfraSpec extends SparkTestBase {
   test("Bench.classifyDrift movers: a localized 5x regression is NAMED in " +
     "the artifact even though the median verdict stays `stable` " +
     "(VERDICT r17 #1), and host bands manufacture no phantom movers") {
-    import graft.Bench.classifyDrift
+    import graft.tools.DriftReport.classifyDrift
     def tailTimes(path: String): Map[String, Double] = {
       val t = new String(Files.readAllBytes(java.nio.file.Paths.get(path)))
       """\\?"(q[0-9A-Z]+)\\?":([0-9.]+)""".r.findAllMatchIn(t)
@@ -2638,167 +2557,44 @@ class InfraSpec extends SparkTestBase {
       real.toString)
   }
 
-  test("Bench.shouldAdoptPrev: a stable run with a NAMED mover never " +
-    "auto-adopts as the drift reference (adopting would normalize a " +
-    "localized regression); force bypasses the verdict only") {
-    import graft.Bench.{shouldAdoptPrev, Drift}
-    def drift(verdict: String, movers: Int = 0) =
-      Drift(263, 1.0, 1.0, 1.0, verdict, movers,
-        if (movers > 0) Seq("qXX" -> 5.0) else Nil)
-    // the clean paths adopt
-    assert(shouldAdoptPrev("healthy", drift("stable"), forceAdopt = false))
-    assert(shouldAdoptPrev("healthy", drift("no-prior"), forceAdopt = false))
-    // the review-r18 case: stable MEDIAN, one 5x mover — refused; one
-    // adoption would bake the regression into the baseline and movers
-    // would read 0 next round
-    assert(!shouldAdoptPrev("healthy", drift("stable", movers = 1),
-      forceAdopt = false))
-    // non-stable verdicts and non-healthy regimes refuse
-    assert(!shouldAdoptPrev("healthy", drift("drifted-host"),
-      forceAdopt = false))
-    assert(!shouldAdoptPrev("healthy", drift("drifted-code"),
-      forceAdopt = false))
-    assert(!shouldAdoptPrev("write-degraded", drift("stable"),
-      forceAdopt = false))
-    // force bypasses the verdict AND the movers gate (the intentional
-    // perf-profile-change escape hatch) — regime/sf guards stay with
-    // the caller
-    assert(shouldAdoptPrev("write-degraded", drift("drifted-code",
-      movers = 5), forceAdopt = true))
-  }
-
-  test("Bench artifact parsers: the COMMITTED reference files round-trip " +
-    "and the legacy baseline format still parses (a silent parse " +
-    "regression would disable adjudication as a ghost no-prior)") {
-    import graft.Bench.{parseBaseline, parsePrev}
-    val sf = "/root/testdata/sf0.1"
-    // the real committed files must parse — these are the inputs every
-    // future full run adjudicates against
-    val baseTxt = new String(Files.readAllBytes(
-      java.nio.file.Paths.get("BENCH_canary_baseline.json")))
-    val base = parseBaseline(baseTxt, sf)
-    assert(base.nonEmpty, "committed baseline did not parse")
-    val (bid, bread, bwin) = base.get
-    assert(bid.nonEmpty && bread > 0 && bread < 10 &&
-      bwin.nonEmpty && bwin.forall(w => w > 0 && w < 60))
-    assert(parseBaseline(baseTxt, "/some/other/sf").isEmpty)
-    val prevTxt = new String(Files.readAllBytes(
-      java.nio.file.Paths.get("BENCH_prev.json")))
-    val prev = parsePrev(prevTxt, sf)
-    assert(prev.nonEmpty, "committed drift reference did not parse")
-    val (pread, pqs) = prev.get
-    assert(pread > 0 && pqs.size > 200 &&
-      pqs.keys.forall(_.contains("_")) && // FULL names, not qNN prefixes
-      pqs.values.forall(v => v >= 0 && v < 300))
-    assert(parsePrev(prevTxt, "/some/other/sf").isEmpty)
-    // legacy single-value baseline (pre-window) reads as a 1-entry
-    // window — the migration path the first windowed run exercised live
-    assert(parseBaseline(
-      """{"boot_id":"b","read":0.315,"write":0.367,"sf":"X"}""", "X")
-      .contains(("b", 0.315, Seq(0.367))))
-    // an EMPTY window (every prior write canary failed) still yields
-    // the read floor — the ADVICE fix that unblocks read-only baselines
-    assert(parseBaseline(
-      """{"boot_id":"b","read":0.3,"write_window":[],"sf":"X"}""", "X")
-      .contains(("b", 0.3, Seq.empty[Double])))
-    assert(parseBaseline(
-      """{"boot_id":"b","read":0.3,"write_window":[0.4,0.5],"sf":"X"}""",
-      "X").contains(("b", 0.3, Seq(0.4, 0.5))))
-    // garbage and missing sections fail CLOSED (None), never throw
-    assert(parseBaseline("not json at all", "X").isEmpty)
-    assert(parsePrev("not json at all", "X").isEmpty)
-    assert(parsePrev("""{"read":0.3,"sf":"X"}""", "X").isEmpty)
-    assert(parsePrev(
-      """{"read":0.3,"sf":"X","queries":{}}""", "X").isEmpty)
-    assert(parsePrev(
-      """{"boot_id":"b","read":0.3,"sf":"X","queries":{"q1_a":0.5}}""",
-      "X").contains((0.3, Map("q1_a" -> 0.5))))
-    // the anchored read regex (ADVICE r17): a stray `"read":` substring
-    // in some FUTURE field cannot shadow the boot_id-adjacent one the
-    // writer emits — the decoy below parses to the REAL 0.3, not 9.9.
-    // The decoy must contain the LITERAL `"read":` token (a nested
-    // canary-style object does; a field merely ENDING in read, like
-    // "thread", never matched even the old unanchored regex — that
-    // earlier decoy was vacuous, review r18)
-    assert(parsePrev(
-      """{"canary_pre":{"read":9.9},"boot_id":"b","read":0.3,"sf":"X",""" +
-        """"queries":{"q1_a":0.5}}""",
-      "X").contains((0.3, Map("q1_a" -> 0.5))))
-    // sf WRITE-guard (r18, found live): a bench run at a different sf
-    // must not replace the committed references — the round's sf0.001
-    // smoke traded the driver's sf0.1 baseline for smoke-scale numbers
-    import graft.Bench.sfCompatible
-    val tmp = java.nio.file.Files.createTempFile("sfguard", ".json")
-    java.nio.file.Files.writeString(tmp,
-      """{"boot_id":"b","read":0.3,"sf":"/root/testdata/sf0.1"}""")
-    assert(sfCompatible(tmp, "/root/testdata/sf0.1"))
-    assert(!sfCompatible(tmp, "/root/testdata/sf0.001"),
-      "a mismatched-sf committed reference must block the write")
-    // both committed files carry sf0.1 — the guard protects them from
-    // any smoke run as committed
-    assert(!graft.Bench.sfCompatible(
-      java.nio.file.Paths.get("BENCH_prev.json"), "/root/testdata/sf0.001"))
-    assert(!graft.Bench.sfCompatible(
-      java.nio.file.Paths.get("BENCH_canary_baseline.json"),
-      "/root/testdata/sf0.001"))
-    // nothing committed (or no sf field) = nothing to protect
-    assert(sfCompatible(
-      java.nio.file.Paths.get("/no/such/file.json"), "/x"))
-    java.nio.file.Files.writeString(tmp, """{"read":0.3}""")
-    assert(sfCompatible(tmp, "/x"))
-    java.nio.file.Files.delete(tmp)
-  }
-
-  test("DriftReport.parseFull round-trips BOTH committed artifact shapes " +
-    "(VERDICT r17 #3): a silent parse regression in the CLI is the same " +
-    "ghost no-prior class the bench parsers are pinned against") {
+  test("DriftReport.parseFull reads the BENCH_full.json shape, with or " +
+    "without the fields older artifacts carried, and fails closed on " +
+    "anything else") {
     import graft.tools.DriftReport.parseFull
-    // shape 1: the flat committed drift reference (BENCH_prev.json) —
-    // same file the bench's own parsePrev adjudicates against
-    val prevTxt = new String(Files.readAllBytes(
-      java.nio.file.Paths.get("BENCH_prev.json")))
-    val (pRead, pQs) = parseFull(prevTxt)
-    assert(pRead > 0 && pRead < 10, s"prev read $pRead")
-    assert(pQs.size > 200 && pQs.keys.forall(_.contains("_")) &&
-      pQs.values.forall(v => v >= 0 && v < 300))
-    // ...and it agrees with the bench's own parser on the same file
-    val benchView = graft.Bench.parsePrev(prevTxt, "/root/testdata/sf0.1")
-    assert(benchView.map(_._2).contains(pQs))
-    assert(benchView.map(_._1).contains(pRead))
-    // shape 2: the full-artifact form (target/BENCH_full.json) — pinned
-    // on a literal mirroring the writer's field order, min-of-pre/post
-    // canary selection included
+    // a literal mirroring Bench's writer: per-query {"min","p1","p2"}
+    // under full names, raw pre/post canaries, the failed list
     val fullTxt =
-      """{"metric":"total","value":10.0,"unit":"sec","load_ok":true,""" +
-        """"load1":1.0,"regime":"healthy","boot_id":"b",""" +
-        """"drift":{"n":2,"median":1.0,"canary":1.0,"residual":1.0,""" +
-        """"movers":0,"top":[],"verdict":"stable"},"prev_adopted":true,""" +
+      """{"metric":"total","value":2.0,"unit":"sec","load_ok":true,""" +
+        """"load1":1.0,""" +
         """"canary_pre":{"read":0.468,"write":0.5,"loadavg":"0.1"},""" +
         """"canary_post":{"read":0.327,"write":0.4,"loadavg":"0.2"},""" +
-        """"n_queries":2,"queries":{""" +
+        """"n_queries":3,"queries":{""" +
         """"q01_scan":{"min":0.5,"p1":0.6,"p2":0.5},""" +
-        """"q02_filter":{"min":1.5,"p1":1.5,"p2":1.6}},"sf":"X"}"""
+        """"q02_filter":{"min":1.5,"p1":1.5,"p2":1.6}},""" +
+        """"failed":["q03_join"],"sf":"X"}"""
     val (fRead, fQs) = parseFull(fullTxt)
     assert(fRead == 0.327, s"min-of-pre/post read, got $fRead")
+    // a failed query has no time, so it has nothing to compare
     assert(fQs == Map("q01_scan" -> 0.5, "q02_filter" -> 1.5), fQs.toString)
+    // artifacts written while the bench still adjudicated itself carry
+    // regime/drift fields ahead of the canaries: they read the same, so
+    // an old artifact can be compared with a new one
+    val older = fullTxt.replace(""""load1":1.0,""",
+      """"load1":1.0,"regime":"healthy","boot_id":"b",""" +
+        """"drift":{"n":2,"median":1.0,"canary":1.0,"residual":1.0,""" +
+        """"movers":0,"top":[],"verdict":"stable"},"prev_adopted":true,""")
+    assert(parseFull(older) == ((fRead, fQs)))
     // a failed canary (-1) is excluded from the min, not adopted
     val failedPre = fullTxt.replace(""""canary_pre":{"read":0.468""",
       """"canary_pre":{"read":-1.000""")
     assert(parseFull(failedPre)._1 == 0.327)
-    // wrong-shape input yields the EMPTY map and no read — a downstream
-    // classifyDrift sees no-prior instead of a silent partial verdict
-    val (gRead, gQs) = parseFull("not an artifact at all")
-    assert(gQs.isEmpty && gRead == -1.0)
-    // the flat-shape read fallback is ANCHORED like Bench.parsePrev
-    // (review r18 — the ADVICE fix had been applied to one parser but
-    // not the CLI's): a stray nested "read": before the boot_id-
-    // adjacent pair must not shadow it
-    val decoyed =
-      """{"weather":{"read":9.9},"boot_id":"b","read":0.3,"sf":"X",""" +
-        """"queries":{"q1_a":0.5}}"""
-    val (dRead, dQs) = parseFull(decoyed)
-    assert(dRead == 0.3 && dQs == Map("q1_a" -> 0.5),
-      s"decoy shadowed the anchored read: $dRead $dQs")
+    // wrong-shape input (garbage, or flat name:seconds pairs) yields the
+    // EMPTY map and no read — classifyDrift then says no-prior instead
+    // of a silent partial verdict
+    assert(parseFull("not an artifact at all") == ((-1.0, Map.empty)))
+    assert(parseFull(
+      """{"boot_id":"b","read":0.3,"queries":{"q1_a":0.5}}""") ==
+      ((-1.0, Map.empty)))
     // the live file, when a full run has produced it, must also parse
     // (same-shape guarantee between the writer and this reader)
     val live = java.nio.file.Paths.get("target/BENCH_full.json")
@@ -2806,6 +2602,61 @@ class InfraSpec extends SparkTestBase {
       val (lRead, lQs) = parseFull(new String(Files.readAllBytes(live)))
       assert(lQs.size > 200 && lRead > 0, s"live artifact: $lRead ${lQs.size}")
     }
+  }
+
+  test("Bench timed pass: a query that throws is listed in failed, has no " +
+    "time, and adds nothing to the total") {
+    import graft.Bench.{minima, timedPass}
+    def ok(name: String) =
+      GraftQuery(name, "", (s, _) => s.range(1000).toDF("id"), None)
+    // throws in the sink, where a real query's execution errors surface
+    val bad = GraftQuery("q02_bad", "",
+      (s, _) => s.range(1).selectExpr("raise_error('boom') AS x"), None)
+    val qs = Seq(ok("q01_ok"), bad, ok("q03_ok"))
+    val p1 = timedPass(spark, "unused", qs)
+    assert(p1.keySet == Set("q01_ok", "q03_ok"), p1.toString)
+    val p2 = timedPass(spark, "unused", qs)
+    val t = minima(qs.map(_.name), Seq(p1, p2))
+    assert(t.failed == Seq("q02_bad"))
+    assert(t.queries.map(_._1) == Seq("q01_ok", "q03_ok"))
+    assert(t.total == math.min(p1("q01_ok"), p2("q01_ok")) +
+      math.min(p1("q03_ok"), p2("q03_ok")))
+    // a query that completes in one pass and throws in the other is a
+    // failure too: one of its readings is a time-to-exception
+    val flaky = minima(qs.map(_.name), Seq(p1 + ("q02_bad" -> 0.001), p2))
+    assert(flaky.failed == Seq("q02_bad") && flaky.total == t.total)
+  }
+
+  test("PlanAudit.parseConf: PLAN_CONF entries split on the first '=', " +
+    "empty entries are skipped, an entry without '=' fails naming it") {
+    import graft.PlanAudit.parseConf
+    assert(parseConf(" a.b = 1 ,, c=x=y,") == Seq("a.b" -> "1", "c" -> "x=y"))
+    assert(parseConf("").isEmpty)
+    val e = intercept[IllegalArgumentException](parseConf("a=1,oops"))
+    assert(e.getMessage.contains("'oops'"), e.getMessage)
+  }
+
+  test("no fully qualified name is declared in two source files: a " +
+    "src/test copy of a src/main object would shadow it by classpath order") {
+    import scala.jdk.CollectionConverters._
+    val pkgRe = """(?m)^package\s+([\w.]+)""".r
+    val declRe = ("""(?m)^(?:(?:private(?:\[\w+\])?|protected|final|""" +
+      """sealed|abstract|case|implicit)\s+)*(?:object|class|trait)\s+(\w+)""").r
+    val files = Seq("src/main/scala", "src/test/scala").flatMap { root =>
+      val walk = Files.walk(java.nio.file.Paths.get(root))
+      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    val decls = files.flatMap { f =>
+      val text = new String(Files.readAllBytes(f))
+      val pkg = pkgRe.findAllMatchIn(text).map(_.group(1)).mkString(".")
+      declRe.findAllMatchIn(text).map(m => s"$pkg.${m.group(1)}" -> f).toSeq
+    }
+    assert(decls.size > 100, s"the scan found only ${decls.size} declarations")
+    // a class and its companion object share one file
+    val twice = decls.groupBy(_._1).view.mapValues(_.map(_._2).distinct)
+      .filter(_._2.size > 1).toMap
+    assert(twice.isEmpty, twice.mkString("\n"))
   }
 
   test("schema sync mirrors sync_tables_with_schema.sh: dry-run default, " +
@@ -3120,6 +2971,11 @@ class InfraSpec extends SparkTestBase {
       "runtime write failure must leave the old rows")
     // ...and the failed attempt's staging table was cleaned up
     assert(!spark.catalog.tableExists("cs_demo.m__ow_staging"))
+    // a straggler task of that job can re-create the staging location
+    // after the drop (its commit races the abort): the next overwrite
+    // must not wedge on LOCATION_ALREADY_EXISTS
+    new java.io.File("spark-warehouse/cs_demo.db/m__ow_staging/_temporary")
+      .mkdirs()
     // SELF-READ overwrite (the advisor's medium finding): the frame's
     // lineage reads the TARGET. The old path truncated the source
     // files out from under the final append; here the lineage fully

@@ -429,12 +429,12 @@ class PlanSpec extends SparkTestBase {
       "qR1_unified_downloads_view" -> 1, // unified scan + order
       "qR2_ndt7_union_view" -> 2, // union group rollup + order
       "qR4_embedding_screen" -> 5, // bucket probe join + min agg + left join + order
-      // round-13 addition (audited via PinAudit at declaration time):
+      // round-13 addition (exchanges counted at declaration time):
       // qA0's cpp machinery behind the C4 gate — the gate itself is a
       // per-row HOF pass and adds no exchange
       "qS0_gated_containment" -> 8,
-      // round-14 additions (PinAudit at declaration time): qS1 net 8 —
-      // the df gate's aggregate + anti-join live in the fenced
+      // round-14 additions (exchanges counted at declaration time):
+      // qS1 net 8 — the df gate's aggregate + anti-join live in the fenced
       // gated-sets stage, so the declared plan is qS0's cpp shape over
       // the staged read; qS2 net 1 — union of two pruned scans + the
       // final order (the dialect shim is a string rewrite, zero plan
@@ -445,7 +445,7 @@ class PlanSpec extends SparkTestBase {
       // two archive scans + the final order — stacked views cost no
       // exchanges
       "qS3_legacy_lineage_view" -> 1,
-      // round-15 (PinAudit at declaration): the standardSQL twin
+      // round-15 (exchanges counted at declaration): the standardSQL twin
       // collapses further — ONE pruned archive scan + the final order;
       // Catalyst eliminates the named-view annotation LEFT JOIN
       // outright because ann_value is never selected (deduped right

@@ -569,7 +569,7 @@ class PropertySpec extends SparkTestBase {
 
   test("classifyDrift invariants on random query maps: uniform scaling, " +
     "canary lockstep, permutation invariance, reference-vs-self") {
-    import graft.Bench.classifyDrift
+    import graft.tools.DriftReport.classifyDrift
     val mapGen = for {
       n <- Gen.choose(25, 200)
       ts <- Gen.listOfN(n, Gen.choose(0.05, 20.0))

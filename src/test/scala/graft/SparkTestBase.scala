@@ -9,13 +9,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 object SparkTestBase {
   lazy val spark: SparkSession = {
-    // The suite's plan-shape assertions (PlanSpec exchange pins, the
-    // broadcast-probe shapes) are derived under the DF-ORDER dedup
-    // default; running sbt with -Dgraft.dedup.valueOrder=true would
-    // silently flip containmentPrefixPairs to value order and redden
-    // the qS0 pin with a misleading failure (ADVICE r13). The opt-out
-    // is a production knob, not a test matrix — pin the default here.
-    System.clearProperty("graft.dedup.valueOrder")
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
