@@ -1,5 +1,7 @@
 package graft.catalog
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.types.StructType
@@ -329,7 +331,7 @@ object ConnectorSink {
           Some(ident.database
             .map(d => SchemaSync.quoted(d) + ".").getOrElse("") +
             SchemaSync.quoted(ident.table + "__ow_staging"))
-        } catch { case _: Throwable => None }
+        } catch { case NonFatal(_) => None } // unparsable: never staged
         // a sink-created staging table is MARKED (table property), so
         // a user's own table that merely happens to carry the staging
         // name is never dropped, renamed, or hijacked by this sink —
@@ -338,7 +340,7 @@ object ConnectorSink {
           spark.sessionState.catalog.getTableMetadata(
             spark.sessionState.sqlParser.parseTableIdentifier(name))
             .properties.get("graft.ow_staging").contains("true")
-        } catch { case _: Throwable => false }
+        } catch { case NonFatal(_) => false } // absent: not sink-made
         // rename-recovery on EVERY parquet write, not just overwrite
         // (self-review r18 #1): a crash between a previous overwrite's
         // DROP and RENAME leaves the new rows in staging and no
@@ -353,7 +355,7 @@ object ConnectorSink {
         def unmark(): Unit =
           try spark.sql(s"ALTER TABLE ${p.target} UNSET TBLPROPERTIES " +
             "IF EXISTS ('graft.ow_staging')")
-          catch { case _: Throwable => () }
+          catch { case NonFatal(_) => () } // swap done; marker is cosmetic
         stagingOpt.foreach { staging =>
           if (!spark.catalog.tableExists(p.target) &&
               spark.catalog.tableExists(staging) && sinkStaging(staging)) {
@@ -444,7 +446,7 @@ object ConnectorSink {
           catch {
             case e: Throwable =>
               try spark.sql(s"DROP TABLE IF EXISTS $staging")
-              catch { case _: Throwable => () }
+              catch { case NonFatal(d) => e.addSuppressed(d) } // report both
               throw e
           }
           // the swap: metadata-only window, recovered by the rename-

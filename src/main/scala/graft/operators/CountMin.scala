@@ -148,7 +148,7 @@ object CountMin {
     // the round-19 qE4/qP2 plan audit showed the documents table
     // scanned twice through the full md5 pipeline). Bounded tier (the
     // sketch-register class); streaming frames pass through.
-    val sk = if (sk0.isStreaming) sk0 else graft.plans.Fence.bounded(sk0)
+    val sk = graft.plans.Fence.bounded(sk0)
     val pr = probes.select(col(probeCol).as("probe")).distinct()
       .withColumn("d", explode(sequence(lit(0), lit(depth - 1))))
       .withColumn("cell",

@@ -11,21 +11,15 @@ import org.apache.spark.sql.functions._
   * frames no matter how large the corpora that produced them were.
   * Laplace +1 smoothing keeps one-sided bins finite; contributions are
   * exact expressions over integer counts.
+  *
+  * The quantile and KS reductions read their bounded (v, cnt)-style
+  * count table several times (bounds, block offsets, the in-block
+  * cumulative leg), so each fences it once with
+  * [[graft.plans.Fence.bounded]]: without it every leg re-evaluates
+  * the count aggregation AND the corpus scan under it (the round-19
+  * qM9 plan audit showed 16 scans of the events table for one query).
   */
 object Drift {
-
-  /** Fence for the (v, cnt)-style bounded count tables every reduction
-    * here reads several times (bounds + block offsets + the in-block
-    * cumulative leg): without it each leg re-evaluates the count
-    * aggregation AND the corpus scan under it — the round-19 qM9 plan
-    * audit showed 16 scans of the events table for one QQ query.
-    * Bounded tier by the quantize-first contract (per-distinct-value
-    * counts, the [[Eval.scorePartials]] class). Streaming frames pass
-    * through untouched (they cannot be checkpointed; the streaming
-    * screens feed BATCH partials here from foreachBatch).
-    */
-  private def fenceCounts(df: DataFrame): DataFrame =
-    graft.plans.Fence.boundedIfBatch(df)
 
   /** Per-bin PSI contributions. Inputs: (bin, n) tables. Output:
     * bin, n_a, n_b, psi.
@@ -141,7 +135,7 @@ object Drift {
     require(qs.nonEmpty && qs.forall(q => q > 0 && q <= 1),
       "quantiles must lie in (0, 1]")
     require(nBlocks > 0, "nBlocks must be > 0")
-    val counts = fenceCounts(counts0)
+    val counts = graft.plans.Fence.bounded(counts0)
     val bounds = counts.agg(min("v").as("lo"), max("v").as("hi"),
       sum("cnt").as("n"))
     val blocked = counts.crossJoin(broadcast(bounds))
@@ -194,7 +188,7 @@ object Drift {
     require(qs.nonEmpty && qs.forall(q => q > 0 && q <= 1),
       "quantiles must lie in (0, 1]")
     require(nBlocks > 0, "nBlocks must be > 0")
-    val counts = fenceCounts(counts0)
+    val counts = graft.plans.Fence.bounded(counts0)
     val bounds = counts.groupBy("g").agg(min("v").as("lo"),
       max("v").as("hi"), sum("cnt").as("n"))
     val blocked = counts.join(broadcast(bounds), "g")
@@ -317,7 +311,7 @@ object Drift {
   /** Shared KS reduction over the (v, ca, cb) table. */
   private def ksReduce(byV0: DataFrame, nBlocks: Int): DataFrame = {
     require(nBlocks > 0, "nBlocks must be > 0")
-    val byV = fenceCounts(byV0)
+    val byV = graft.plans.Fence.bounded(byV0)
     val bounds = byV.agg(min("v").as("lo"), max("v").as("hi"),
       sum("ca").as("na"), sum("cb").as("nb"))
     val blocked = byV.crossJoin(broadcast(bounds))

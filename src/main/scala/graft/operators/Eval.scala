@@ -108,7 +108,7 @@ object Eval {
     */
   def isotonicBlocksFromPartials(partials: DataFrame,
       maxDistinctScores: Long = 100000L): Seq[IsoBlock] =
-    fitBlocks(partials.localCheckpoint(), maxDistinctScores)
+    fitBlocks(graft.plans.Fence.bounded(partials), maxDistinctScores)
 
   /** PAV over an ALREADY-MATERIALIZED partials frame — the internal
     * entry [[isotonicFit]] uses so its fenced frame isn't checkpointed
@@ -152,7 +152,7 @@ object Eval {
       : DataFrame = {
     // fence the partials once: the driver fit and the expansion read
     // the same bounded frame, not two corpus scans
-    val parts = scorePartials(df, score, label).localCheckpoint()
+    val parts = graft.plans.Fence.bounded(scorePartials(df, score, label))
     val blocks = fitBlocks(parts, 100000L)
     def r6(c: Column) = floor(c * 1000000.0 + 0.5) / 1000000.0
     // expansion is the step-function CASE chain — a pure projection
@@ -287,9 +287,9 @@ object Eval {
     */
   def aucDelong(df: DataFrame, score: Column, label: Column,
       maxDistinctScores: Long = 100000L): DataFrame = {
-    val parts = scorePartials(df, score, label)
-      .withColumn("neg", col("cnt") - col("pos"))
-      .localCheckpoint() // counted by the guard, then folded once
+    // counted by the guard, then folded once
+    val parts = graft.plans.Fence.bounded(scorePartials(df, score, label)
+      .withColumn("neg", col("cnt") - col("pos")))
     val nDistinct = parts.count()
     require(nDistinct <= maxDistinctScores,
       s"aucDelong: $nDistinct distinct scores exceed the " +
@@ -401,7 +401,7 @@ object Eval {
     // fence the bounded residual counts: the bounds / offset / qhat
     // legs otherwise re-run the means join + residual aggregation from
     // the staged base per leg (round-19 audit: qN0 at 48 exchanges)
-    val counts = graft.plans.Fence.boundedIfBatch(
+    val counts = graft.plans.Fence.bounded(
       resid.groupBy("r").agg(count(lit(1)).as("cnt")))
     val bounds = counts.agg(min("r").as("lo"), max("r").as("hi"),
       sum("cnt").as("n"))
@@ -462,7 +462,7 @@ object Eval {
       "conformal_by_base")
     // means is |groups|-bounded and read by four legs (residuals, the
     // qhat rank, the test pass, the anchor join) — fence it once
-    val means = graft.plans.Fence.boundedIfBatch(base.filter(col("cal"))
+    val means = graft.plans.Fence.bounded(base.filter(col("cal"))
       .groupBy("g").agg(count(lit(1)).as("n_cal"), sum("c").as("s_g"))
       .select(col("g"), col("n_cal"),
         (col("s_g").cast("double") / col("n_cal")).as("m")))
@@ -474,7 +474,7 @@ object Eval {
     val wG = Window.partitionBy("g").orderBy("r")
       .rowsBetween(Window.unboundedPreceding, 0)
     // qhat is |groups|-bounded and read twice (test pass + anchor)
-    val qhat = graft.plans.Fence.boundedIfBatch(residCounts
+    val qhat = graft.plans.Fence.bounded(residCounts
       .withColumn("cc", sum("cnt").over(wG))
       .join(broadcast(means.select(col("g"), col("n_cal"))), Seq("g"))
       .withColumn("k",
@@ -526,7 +526,7 @@ object Eval {
     // block-offset and ranked legs each re-evaluated the partial
     // aggregation and the corpus scan under it (round-19 plan audit:
     // qH3 scanned events 14x; guide §2.4)
-    val byScore = graft.plans.Fence.boundedIfBatch(byScore0)
+    val byScore = graft.plans.Fence.bounded(byScore0)
     // Two-phase prefix sum over ascending score: range blocks derived
     // from the (tiny, broadcast) min/max, monotonic in s, so block-local
     // cumulative counts + per-block start offsets equal the global
@@ -586,7 +586,7 @@ object Eval {
       label: Column, nBlocks: Int = 64): DataFrame = {
     require(nBlocks > 0, "nBlocks must be > 0")
     // same once-fenced partials as [[aucFromPartials]] (guide §2.4)
-    val byScore = graft.plans.Fence.boundedIfBatch(df
+    val byScore = graft.plans.Fence.bounded(df
       .select(group.as("g"), score.cast("double").as("s"),
         when(label, 1L).otherwise(0L).as("y"))
       .filter(col("s").isNotNull)
@@ -647,7 +647,7 @@ object Eval {
       nBlocks: Int = 256): DataFrame = {
     require(nBlocks > 0, "nBlocks must be > 0")
     // same once-fenced partials as [[aucFromPartials]] (guide §2.4)
-    val byT = graft.plans.Fence.boundedIfBatch(df
+    val byT = graft.plans.Fence.bounded(df
       .select(threshold.cast("double").as("t"),
         when(label, 1L).otherwise(0L).as("y"))
       .filter(col("t").isNotNull)

@@ -34,7 +34,7 @@ object Info {
     // |levels_a × levels_b|-bounded contingency table read by four
     // legs (row/col margins, total, joint fold) — fence it once (the
     // round-19 chi2Independence treatment; guide §2.4)
-    val cells = graft.plans.Fence.boundedIfBatch(
+    val cells = graft.plans.Fence.bounded(
       df.select(a.cast("string").as("av"),
           b.cast("string").as("bv"))
         .filter(col("av").isNotNull && col("bv").isNotNull)
@@ -93,7 +93,7 @@ object Info {
     require(nBlocks > 0, "nBlocks must be > 0")
     // fence the bounded value counts once: bounds / offsets / ranked
     // legs otherwise re-run the count aggregation per leg (guide §2.4)
-    val counts = graft.plans.Fence.boundedIfBatch(df
+    val counts = graft.plans.Fence.bounded(df
       .select(floor(value.cast("double") * 100 + 0.5).cast("long").as("v"))
       .filter(col("v").isNotNull)
       .groupBy("v").agg(count(lit(1)).as("c")))

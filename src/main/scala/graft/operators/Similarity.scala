@@ -310,13 +310,11 @@ object Similarity {
     }
   }
 
-  /** `rebalanceFloor` passes through to [[planBlocks]] unchanged by
-    * default; raising it forces the uniform path on an adversarial
-    * corpus, so the rescue's cost can be measured against the exact
-    * code both regimes run (the r18 rescue probe, SCALE.md).
+  /** The candidates at every `stride`-th vid-order position, stride =
+    * ceil(n / maxCentroids), so at most `maxCentroids` rows survive.
     */
   private[graft] def codebookKept(cands: DataFrame,
-      maxCentroids: Int, rebalanceFloor: Long = 1L << 20): DataFrame = {
+      maxCentroids: Int): DataFrame = {
     // one candidate-frame pass serves the whole decision: count (for
     // the stride) and min/max (for the block width) in a single
     // aggregate — the candidate frame is itself a full-corpus filter,
@@ -337,7 +335,7 @@ object Similarity {
       require(hi - lo >= 0,
         s"vid range [$lo, $hi] spans more than 2^63 — " +
           "re-id the corpus before codebook selection")
-      val plan = planBlocks(cands, n, lo, hi, rebalanceFloor)
+      val plan = planBlocks(cands, n, lo, hi)
       // block offsets: a prefix sum over the ≤1025 collected counts —
       // driver-side arithmetic replaces the old single-task
       // Window.orderBy prefix-sum job over the same tiny frame

@@ -85,9 +85,9 @@ object Survival {
     val subjects = df.select(duration.cast("long").as("t"),
         when(event, 1L).otherwise(0L).as("e"))
       .filter(col("t").isNotNull && col("t") >= 0)
-    val byT = subjects.groupBy("t")
-      .agg(sum("e").as("d"), sum(lit(1L) - col("e")).as("c"))
-      .localCheckpoint() // total and the filtered fold read it once
+    // total and the filtered fold read it once
+    val byT = graft.plans.Fence.bounded(subjects.groupBy("t")
+      .agg(sum("e").as("d"), sum(lit(1L) - col("e")).as("c")))
     val tot = byT.agg(sum(col("d") + col("c")).as("n_total"))
     val folded = byT.filter(col("t") <= tau)
       .agg(sort_array(collect_list(

@@ -170,9 +170,9 @@ object TextAnalysis {
     * vocab consumers (top-k listing, unigram LM, id encoding) all start
     * from: ONE explode + partial-aggregated count over the token stream,
     * producing a |vocab|-row frame. Consumers needing several scalars
-    * (top-k AND total mass) should `localCheckpoint()` the result and
-    * run their tiny follow-up jobs against the bounded frame instead of
-    * re-scanning the corpus per scalar.
+    * (top-k AND total mass) should fence it with
+    * [[graft.plans.Fence.bounded]] and run their tiny follow-up jobs
+    * against the bounded frame instead of re-scanning the corpus.
     */
   def tokenFreq(df: DataFrame, textCol: String): DataFrame =
     df.select(explode(TextOps.tokens(col(textCol))).as("tok"))

@@ -48,7 +48,7 @@ object Trend {
     // |days|-bounded daily aggregate, read by the mean fold AND the
     // deviation frame — fence it once (guide §2.4; the round-19 audit
     // had qK7 at 34 exchanges, its daily aggregate re-run per leg)
-    val daily = graft.plans.Fence.boundedIfBatch(
+    val daily = graft.plans.Fence.bounded(
       dailyCents(df, tsCol, value)
         .withColumn("x", col("sc") / col("n") / 100.0))
     // grand mean of the DAILY series (unweighted, standard ACF input);
@@ -61,7 +61,7 @@ object Trend {
         size(col("xs")).as("nd"))
     // deviation frame read by the denominator and BOTH lag-join legs —
     // fence it once (|days|-bounded)
-    val withMean = graft.plans.Fence.boundedIfBatch(
+    val withMean = graft.plans.Fence.bounded(
       daily.crossJoin(broadcast(meanRow))
         .withColumn("d",
           floor((col("x") - col("sx") / col("nd")) * 10000.0 + 0.5)

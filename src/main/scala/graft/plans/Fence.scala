@@ -3,30 +3,29 @@ package graft.plans
 import org.apache.spark.sql.DataFrame
 
 /** THE fence-policy chokepoint: every multi-consumer / iterative
-  * barrier in the operator library routes through here, and the choice
-  * of fence is a SIZE policy, not a per-call-site judgment call
-  * (InfraSpec enumerates the allowed direct `localCheckpoint` sites so
-  * a new fence can't silently pick the wrong tier):
+  * barrier in `src/main` routes through here, and the choice of fence
+  * is a SIZE policy with one function per tier (an InfraSpec guard
+  * fails on a `localCheckpoint` call outside this file or a [[Stage]]
+  * write outside `graft.plans`):
   *
   *  - [[corpus]] — the frame is proportional to the corpus (per-doc
   *    shingle sets, signatures, featurized rows, edge lists, per-round
-  *    rank/label tables). `localCheckpoint` would pin corpus-scale
-  *    blocks in executor-local storage (100 TB must fit on executor
-  *    disks) and make any executor loss unrecoverable mid-job; these
-  *    take the durable [[Stage]] writer instead — parquet under the
-  *    stage root, read back as a plain pruned columnar scan. Unique
-  *    per call, so per-round fences never clobber a frame still being
-  *    read.
-  *  - [[corpusBucketed]] — [[corpus]] for frames an iterative consumer
-  *    re-probes on one key every round (HashMin edges, PageRank edge+
-  *    degree tables): written bucketed so the read-back keeps its
-  *    hash partitioning and rounds shuffle only the small re-derived
-  *    side.
+  *    rank/label tables). An executor-local checkpoint would pin
+  *    corpus-scale blocks in executor storage (100 TB must fit on
+  *    executor disks) and make any executor loss unrecoverable
+  *    mid-job; these take the durable [[Stage]] writer instead —
+  *    parquet under the stage root, read back as a plain pruned
+  *    columnar scan. Unique per call, so per-round fences and re-runs
+  *    never clobber a frame still being read. [[corpusBucketed]] is
+  *    the same tier for frames an iterative consumer re-probes on one
+  *    key every round (HashMin edges, PageRank edge+degree tables):
+  *    written bucketed so the read-back keeps its hash partitioning and
+  *    rounds shuffle only the small re-derived side.
   *  - [[bounded]] — the frame is DRIVER-BOUNDED (cut points, block
-  *    offsets, codebooks, sketch registers, |groups|-row partials):
-  *    executor-local checkpoint is the right fence — cheaper than a
-  *    filesystem round-trip, and losing it re-runs a bounded
-  *    computation, not a corpus pass.
+  *    offsets, codebooks, sketch registers, |groups|-row partials, one
+  *    micro-batch): executor-local checkpoint is the right fence —
+  *    cheaper than a filesystem round-trip, and losing it re-runs a
+  *    bounded computation, not a corpus pass.
   */
 object Fence {
 
@@ -44,21 +43,12 @@ object Fence {
       bucketCol: String, buckets: Int = 0): DataFrame =
     Stage.materializeBucketed(df, name, bucketCol, buckets)
 
-  /** Eager executor-local fence for a DRIVER-BOUNDED partial. */
-  def bounded(df: DataFrame): DataFrame = df.localCheckpoint(true)
-
-  /** [[bounded]] for operators whose frames may arrive from a
-    * streaming micro-batch pipeline: streaming frames cannot be
-    * checkpointed and pass through untouched (their duplicated legs
-    * are a per-micro-batch cost the stream owner already accepted).
-    * `graft.fence.bounded=0` (session conf) disables the fence — the
-    * A/B switch for measuring checkpoint cost vs duplicated-leg cost
-    * on a given corpus size. */
-  def boundedIfBatch(df: DataFrame): DataFrame =
-    if (df.isStreaming ||
-        df.sparkSession.conf.getOption("graft.fence.bounded")
-          .contains("0")) df
-    else bounded(df)
+  /** Eager executor-local fence for a DRIVER-BOUNDED partial. A
+    * streaming frame cannot be checkpointed and passes through
+    * untouched (its duplicated legs are a per-micro-batch cost the
+    * stream owner already accepted). */
+  def bounded(df: DataFrame): DataFrame =
+    if (df.isStreaming) df else df.localCheckpoint(true)
 
   /** Eagerly reclaim a SUPERSEDED [[corpus]]/[[corpusBucketed]] frame
     * — the iterative-operator discipline: once round N+1's fence has

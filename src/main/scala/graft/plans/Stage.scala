@@ -3,10 +3,15 @@ package graft.plans
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Durable stage materialization — the WET-file semantics.
+/** Durable stage materialization — the WET-file semantics, and the
+  * writer behind the corpus tier of [[Fence]]: code outside
+  * `graft.plans` fences through [[Fence.corpus]] /
+  * [[Fence.corpusBucketed]], never by calling this object directly.
   *
   * A multi-stage curation chain (HTML extraction → quality gate →
   * dedup) needs a barrier after the expensive per-row extraction so
@@ -18,12 +23,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * read it (ref: transform/web100.sql:8-13 CTAS pattern;
   * schema/README.md ingestion pipeline).
   *
-  * `localCheckpoint()` is the wrong fence for that at cluster scale:
-  * it truncates lineage AND pins the blocks in executor-local
-  * storage, so an executor loss mid-job is unrecoverable and 100 TB
-  * of extracted text must fit on executor disks. This writer is the
-  * literal stage-table semantics instead — write the frame to
-  * parquet under a configurable stage root and read it back:
+  * An executor-local checkpoint ([[Fence.bounded]]) is the wrong
+  * fence for that at cluster scale: it truncates lineage AND pins the
+  * blocks in executor-local storage, so an executor loss mid-job is
+  * unrecoverable and 100 TB of extracted text must fit on executor
+  * disks. This writer is the literal stage-table semantics instead —
+  * write the frame to parquet under a configurable stage root and
+  * read it back:
   *
   *  - durable: blocks live on the stage filesystem, not in executor
   *    memory/disk — executor loss just re-reads the file splits;
@@ -118,36 +124,33 @@ object Stage {
               val p = new Path(base)
               p.getFileSystem(hconf).delete(p, true)
               ()
-            } catch { case _: Throwable => () }
+            } catch {
+              // the JVM is exiting: warn so a leftover root is explained
+              case NonFatal(e) => System.err.println(
+                s"[stage] WARNING: shutdown delete $base failed: $e")
+            }
           }, 50)
-      } catch { case _: Throwable => () }
+      } catch {
+        // a JVM already shutting down refuses new hooks; nothing to clean
+        case NonFatal(_) => ()
+      }
     }
 
-  /** Write `df` to `<stageDir>/<name>` as parquet and return a frame
-    * reading it back. Eager (the write is an action) — this IS the
-    * stage boundary. Overwrite mode: re-running the same query in the
-    * same session replaces the prior stage output, so a frame returned
-    * by an EARLIER run must be fully consumed before the re-run (the
-    * sequential bench/verify discipline); interactive callers that
-    * hold results across re-runs should use [[materializeUnique]].
-    */
-  def materialize(df: DataFrame, name: String): DataFrame = {
+  /** Write `df` to `<stageDir>/<name>_<seq>` as parquet and return a
+    * frame reading it back. Eager (the write is an action) — this IS
+    * the stage boundary. The per-call suffix means no stage output ever
+    * clobbers a frame still being read (a prior round's, or a prior
+    * run's of the same query). Iterative callers [[reclaim]] each
+    * superseded round eagerly; the shutdown-hook cleanup of the
+    * session stage root is the backstop. */
+  def materializeUnique(df: DataFrame, name: String): DataFrame = {
     val spark = df.sparkSession
-    val path = s"${stageRoot(spark)}/$name"
+    val path = s"${stageRoot(spark)}/${name}_${seq.incrementAndGet()}"
     df.write.mode("overwrite").parquet(path)
     val back = spark.read.parquet(path)
     stagedFrames.put(back, (path, None))
     back
   }
-
-  /** [[materialize]] with a unique per-call suffix — for iterative
-    * operators that fence a frame once per round inside one query
-    * (each round's stage output must not clobber a prior round's
-    * frame that is still being read). Iterative callers [[reclaim]]
-    * each superseded round eagerly; the shutdown-hook cleanup of the
-    * session stage root is the backstop. */
-  def materializeUnique(df: DataFrame, name: String): DataFrame =
-    materialize(df, s"${name}_${seq.incrementAndGet()}")
 
   /** Eagerly delete a superseded stage — the storage-bound for
     * iterative operators (ADVICE r11: a 10k-merge BPE run writes the
@@ -166,7 +169,6 @@ object Stage {
     // shutdown hook is the backstop — but an OutOfMemoryError or an
     // interrupt must propagate, and a reclamation that fails is warned
     // on stderr so stage storage that stops shrinking is visible
-    import scala.util.control.NonFatal
     def warnFailed(what: String, e: Throwable): Unit =
       System.err.println(s"[stage] WARNING: reclaim $what failed: $e")
     val entry = stagedFrames.remove(df)
@@ -238,7 +240,7 @@ object Stage {
       .map(_.toLong).getOrElse(32L * 1024 * 1024)
     val est =
       try df.queryExecution.optimizedPlan.stats.sizeInBytes
-      catch { case scala.util.control.NonFatal(_) => BigInt(-1) }
+      catch { case NonFatal(_) => BigInt(-1) }
     if (est <= 0 || target <= 0) cap
     else ((est + target - 1) / target).min(cap).max(1).toInt
   }
@@ -275,7 +277,7 @@ object Stage {
         val p = new Path(path)
         p.getFileSystem(spark.sparkContext.hadoopConfiguration)
           .getContentSummary(p).getLength
-      } catch { case scala.util.control.NonFatal(_) => -1L }
+      } catch { case NonFatal(_) => -1L }
       if (target > 0 && actual >= 0 && actual < 8 * target) {
         val needed = math.max(1L, (actual + target - 1) / target).toInt
         if (needed * 4 <= nb) {

@@ -1948,10 +1948,10 @@ object Curation {
         // barrier the extraction kernel re-evaluates per signal.
         // Production materializes extracted text as a stage table —
         // that is literally what WET files are — so the fence IS a
-        // table write: parquet out, columnar scan back
-        // (graft.plans.Stage; durable + lineage-free at cluster
-        // scale, unlike localCheckpoint's executor-pinned blocks).
-        val ext = graft.plans.Stage.materialize(
+        // table write: parquet out, columnar scan back (the corpus
+        // fence; durable + lineage-free at cluster scale, unlike an
+        // executor-local checkpoint's pinned blocks).
+        val ext = graft.plans.Fence.corpus(
           TextAnalysis.extractMainContent(
             t(s, d, "documents").select(col("doc_id"),
               htmlSpark(col("text"), col("doc_id")).as("html")),
@@ -2058,7 +2058,7 @@ object Curation {
         // extraction stage boundary — durable WET-style stage table
         // (see qQ1); the quality and hash legs each read it back as
         // an independent column-pruned parquet scan.
-        val ext = graft.plans.Stage.materialize(
+        val ext = graft.plans.Fence.corpus(
           TextAnalysis.extractMainContent(
             t(s, d, "documents").select(col("doc_id"),
               htmlSpark(col("text"), col("doc_id")).as("html")),

@@ -530,13 +530,13 @@ object ErasUpload {
         // bounded post-agg frame (periods x eras x 11), checkpointed so
         // the two era filters below read it instead of re-running the
         // whole upload chain twice
-        val decs = best.groupBy("period", "view_name")
+        val decs = graft.plans.Fence.bounded(best
+          .groupBy("period", "view_name")
           .agg(count(lit(1)).as("uploads"),
             expr("percentile(mbps4, array(0.0,0.1,0.2,0.3,0.4,0.5," +
               "0.6,0.7,0.8,0.9,1.0))").as("qs"))
           .select(col("period"), col("view_name"), col("uploads"),
-            posexplode(col("qs")).as(Seq("decile", "qv")))
-          .localCheckpoint()
+            posexplode(col("qs")).as(Seq("decile", "qv"))))
         val n5 = decs
           .filter(col("view_name") === "extended_ndt5_uploads")
           .select(col("period"), col("decile"),

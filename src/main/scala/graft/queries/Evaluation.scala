@@ -1404,8 +1404,8 @@ object Evaluation {
           .repartitionByRange(16, col("o_orderdate"))
           .sortWithinPartitions("o_orderdate")
           .write.mode("overwrite").parquet(out)
-        val zones = graft.operators.Layout.collectZones(
-          s, out, Seq("o_orderdate")).localCheckpoint(true)
+        val zones = graft.plans.Fence.bounded(
+          graft.operators.Layout.collectZones(s, out, Seq("o_orderdate")))
         val (df, _, _) = graft.operators.Layout.readPruned(
           s, zones, "o_orderdate",
           lit("1996-01-01").cast("timestamp"),

@@ -1030,8 +1030,8 @@ object Stats {
         t(s, d, "orders")
           .repartition(16, col("o_orderkey"))
           .write.mode("overwrite").parquet(out)
-        val man = graft.operators.Layout.keyManifest(
-          s, out, "o_custkey").localCheckpoint(true)
+        val man = graft.plans.Fence.bounded(
+          graft.operators.Layout.keyManifest(s, out, "o_custkey"))
         val (df, _, _) = graft.operators.Layout.readPrunedByKey(
           s, man, "o_custkey", lit(42L))
         df.select(col("o_orderkey"), col("o_custkey"),

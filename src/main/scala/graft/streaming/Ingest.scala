@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.plans.Fence
+
 /** Structured Streaming ingestion — the clean extension SURVEY.md §2.9
   * identifies: the reference's "stream" is daily batch partitions appended
   * by the upstream parser (/root/reference/schema/README.md:6-9), so the
@@ -159,7 +161,7 @@ object Ingest {
     *   1. ONE shingle + MinHash-signature pass
     *      ([[graft.operators.Dedup.lshBandIndex]]), consumed by both
     *      the probe and the index merge — micro-batch-bounded, so the
-    *      fence is a localCheckpoint;
+    *      fence is [[graft.plans.Fence.bounded]];
     *   2. screen against the standing band index with the batch
     *      operator ([[graft.operators.Dedup.screenAgainstIndexRows]] —
     *      one implementation, stream and batch cannot drift),
@@ -190,9 +192,9 @@ object Ingest {
           df.withColumn("b",
             pmod(xxhash64(col("band_idx"), col("band_key")), lit(n))
               .cast("int")))
-        val freshBands = prune.withB(graft.operators.Dedup.lshBandIndex(
-          batch, idCol, textCol, shingleN, bands, rowsPerBand)
-          .localCheckpoint())
+        val freshBands = prune.withB(Fence.bounded(
+          graft.operators.Dedup.lshBandIndex(
+            batch, idCol, textCol, shingleN, bands, rowsPerBand)))
         val standingAll = standingIndex(spark, idxDir)
         val standing = prune.restrict(standingAll, freshBands)
         val seedFallback = prune.withB(seedIndex)
@@ -378,7 +380,7 @@ object Ingest {
   // bulk backfill would force-broadcast a corpus-scale probe and OOM
   // the driver — VERDICT r13 #1). The contract is therefore ENFORCED
   // per batch, not documented: every screen counts its fenced probe
-  // rows (one cheap job over already-localCheckpointed data) and
+  // rows (one cheap job over already-fenced data) and
   // falls back to the shuffle-hash path past `broadcastMaxRows` —
   // decisions are bit-equal either way, only the plan shape changes.
   //
@@ -648,14 +650,13 @@ object Ingest {
         // micro-batch-bounded fence (<= compactEvery x batch band
         // rows aggregated to distinct bands): consumed by the sb-set
         // collect AND the cold-count join below
-        val dCounts = spark.read
+        val dCounts = Fence.bounded(spark.read
           .parquet(deltas.map(_.path.toString): _*)
           .groupBy("band_idx", bandCol)
           .agg(count(lit(1)).as("dn"))
           .withColumn("sb",
             pmod(xxhash64(col("band_idx"), col(bandCol)),
-              lit(StatsBuckets)).cast("int"))
-          .localCheckpoint()
+              lit(StatsBuckets)).cast("int")))
         val sbSet = dCounts.select("sb").distinct()
           .collect().map(_.getInt(0)).toSeq // <= StatsBuckets ints
         val cold = stats.filter(col("hot") === 0 &&
@@ -1256,8 +1257,8 @@ object Ingest {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         // one decode pass per batch, consumed by screen AND index build
-        val hashes = graft.operators.Multimodal.dhashImages(batch)
-          .toDF().localCheckpoint()
+        val hashes = Fence.bounded(
+          graft.operators.Multimodal.dhashImages(batch).toDF())
         // b = hash(band key) mod N (see the Prune harness). NOTE: a
         // band value's full posting lives in ONE bucket (b is
         // functional on the key), so the maxPosting hot-band counts
@@ -1365,9 +1366,9 @@ object Ingest {
           .getOrElse(seedPlanes)
         // ONE projection pass per batch (cast + norm + plane dots),
         // consumed by the screen probe AND the index merge —
-        // micro-batch-bounded, so the fence is a localCheckpoint
-        val fresh = graft.operators.Dedup.embeddingLshIndex(
-          batch, idCol, vecCol, planes).localCheckpoint()
+        // micro-batch-bounded, so the fence is Fence.bounded
+        val fresh = Fence.bounded(graft.operators.Dedup.embeddingLshIndex(
+          batch, idCol, vecCol, planes))
         // b = LSH bucket mod N (see the Prune harness); rotation
         // changes the bucket, so the compaction adoption below
         // re-derives b AFTER the (possible) rotation
@@ -1429,7 +1430,8 @@ object Ingest {
     *
     *   1. ONE extraction pass (the expensive kernel), consumed by both
     *      the quality leg and the hash leg — micro-batch-bounded, so
-    *      the in-batch fence is a localCheckpoint, not a stage write;
+    *      the in-batch fence is [[graft.plans.Fence.bounded]], not a
+    *      stage write;
     *   2. resolve each batch hash against the STANDING canonical index
     *      (content_hash → first-arrival canonical doc id): the match
     *      set comes from ONE inner join of the index against the
@@ -1474,11 +1476,10 @@ object Ingest {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         // one extraction pass per batch, consumed by two legs
-        val ext = graft.operators.TextAnalysis.extractMainContent(
-            batch, idCol, htmlCol)
+        val ext = Fence.bounded(graft.operators.TextAnalysis
+          .extractMainContent(batch, idCol, htmlCol)
           .where(col("n_kept") > 0)
-          .select(col("doc_id"), col("content").as("text"))
-          .localCheckpoint()
+          .select(col("doc_id"), col("content").as("text")))
         val quality = graft.operators.TextAnalysis
           .gopherRules(ext, "doc_id", "text")
           .select(col("doc_id"), col("keep").as("quality_keep"))
@@ -1502,8 +1503,8 @@ object Ingest {
         // md5+groupBy pass re-executes per consumer, and the restrict
         // collect becomes an extra full hash pass per trigger
         // (ADVICE r13)
-        val batchMin = prune.withB(hashed.groupBy("content_hash")
-          .agg(min("doc_id").as("batch_min"))).localCheckpoint()
+        val batchMin = Fence.bounded(prune.withB(hashed
+          .groupBy("content_hash").agg(min("doc_id").as("batch_min"))))
         val standing = prune.restrict(standingAll, batchMin)
         // `novel` marks hashes the standing index had not seen — they
         // and ONLY they go into this batch's index delta, which keeps
@@ -1518,7 +1519,8 @@ object Ingest {
         // fenced) only broadcasts while it is actually micro
         val bcast = boundedBroadcast(broadcastProbe, batchMin.count(),
           broadcastMaxRows)
-        val resolved = (standing match {
+        // one resolve pass: decisions leg + delta leg
+        val resolved = Fence.bounded(standing match {
           case Some(idx) =>
             val bCols = if (prune.on) Seq(col("b")) else Seq.empty
             val probeSide = batchMin.select(col("content_hash") +: bCols: _*)
@@ -1526,9 +1528,10 @@ object Ingest {
               else probeSide
             val joinKeys = "content_hash" +:
               (if (prune.on) Seq("b") else Seq.empty)
-            val seen = idx.withColumnRenamed("canonical", "standing")
-              .join(probe, joinKeys)
-              .localCheckpoint() // one index scan; read by both legs
+            // one index scan; read by both legs
+            val seen = Fence.bounded(idx
+              .withColumnRenamed("canonical", "standing")
+              .join(probe, joinKeys))
             seen.select(col("content_hash") +:
                 col("standing").as("canonical") +:
                 lit(false).as("novel") +: bCols: _*)
@@ -1543,7 +1546,7 @@ object Ingest {
               col("batch_min").as("canonical") +:
               lit(true).as("novel") +: (if (prune.on)
                 Seq(col("b")) else Seq.empty): _*)
-        }).localCheckpoint() // one resolve pass: decisions leg + delta leg
+        })
         writeVersionedOnce(spark, outDir, batchId) {
           hashed.join(resolved.drop("novel")
               .select("content_hash", "canonical"), "content_hash")

@@ -3280,7 +3280,7 @@ class InfraSpec extends SparkTestBase {
       when(col("id") % 7 === 0, lit(null))
         .otherwise(concat(lit("héllo→"), col("id"))).as("text"),
       (col("id") * 3.5).as("score"))
-    val staged = Stage.materialize(src, "infra_roundtrip")
+    val staged = Stage.materializeUnique(src, "infra_roundtrip")
     // parquet read-back widens nullability (Spark reads all parquet
     // columns as nullable) — names and types must survive exactly
     assert(staged.schema.map(f => (f.name, f.dataType)) ==
@@ -3454,59 +3454,59 @@ class InfraSpec extends SparkTestBase {
     assert(live.size == 1, s"reclaim left ${live.size} label stages")
   }
 
-  test("fence policy: every remaining direct localCheckpoint site is " +
-    "on the reviewed DRIVER-BOUNDED allowlist") {
-    // The size policy lives in graft.plans.Fence: corpus-sized frames
-    // take the durable Stage writer (executor loss replays a file
-    // scan; nothing corpus-scale pins executor-local storage), and
-    // ONLY reviewed driver-bounded partials may call localCheckpoint
-    // directly. This guard fails when a new direct call site appears,
-    // forcing the size-policy review instead of a silent default.
-    // Allowed sites (file -> expected call count), each bounded by:
-    //   Fence.scala        the bounded() helper itself
-    //   Ingest.scala       one microbatch (trigger-bounded)
-    //   Eval.scala         distinct-quantized-score partials
-    //                      (<= 100k cap enforced at the collect)
-    //   Survival.scala     per-distinct-duration value counts
-    //   ErasUpload.scala   |periods x views| x 11 decile rows
-    //   Evaluation.scala   per-file zone manifest (|files| rows)
-    //   Stats.scala        per-file key manifest (|files| rows)
-    val allowed = Map(
-      "plans/Fence.scala" -> 1,
-      // eight microbatch-bounded fences: the media screen's per-batch
-      // decode pass and the capped screen's delta band-count pass
-      // (<= compactEvery x batch rows, read by the sb-set collect and
-      // the cold-count join); the web screen's per-batch extraction
-      // pass, its distinct-hash probe (|batch| rows, read by the
-      // restrict bucket-set collect + probe join + novel anti-join),
-      // its standing-match set (one index scan read by both resolve
-      // legs) and its canonical-resolve pass (|batch hashes| rows,
-      // read by the decisions leg and the delta leg); the ANN
-      // screen's per-batch LSH projection pass; and the MinHash
-      // screen's per-batch band-row pass (|batch| x bands rows)
-      "streaming/Ingest.scala" -> 8,
-      "operators/Eval.scala" -> 3,
-      "operators/Survival.scala" -> 1,
-      "queries/ErasUpload.scala" -> 1,
-      "queries/Evaluation.scala" -> 1,
-      "queries/Stats.scala" -> 1)
+  /** (path under src/main/scala/graft, body) for every main source. */
+  private def mainSources: Seq[(String, String)] = {
+    import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala/graft")
-    val found = scala.collection.mutable.Map.empty[String, Int]
-    java.nio.file.Files.walk(root).forEach { p =>
-      if (p.toString.endsWith(".scala")) {
-        val body = new String(java.nio.file.Files.readAllBytes(p))
-        // count CALL sites, not comment mentions
-        val n = "\\.localCheckpoint\\(".r.findAllIn(body).length
-        if (n > 0) found(root.relativize(p).toString) = n
-      }
-    }
-    val extra = found.toSeq.collect {
-      case (f, n) if n > allowed.getOrElse(f, 0) =>
-        s"$f: $n direct localCheckpoint calls " +
-          s"(allowlisted: ${allowed.getOrElse(f, 0)})"
-    }
-    assert(extra.isEmpty,
-      "un-reviewed direct localCheckpoint sites (route corpus-sized " +
-        "frames through graft.plans.Fence):\n" + extra.mkString("\n"))
+    Files.walk(root).iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => (root.relativize(p).toString,
+        new String(Files.readAllBytes(p)))).toSeq
+  }
+
+  test("fence policy: src/main fences only through graft.plans.Fence — " +
+    "no localCheckpoint outside Fence.scala, no stage writer outside plans/") {
+    // one function per tier, so a fence-policy change (a lazy plan node,
+    // a different bounded primitive) is a change to Fence alone
+    val bad = for {
+      (f, body) <- mainSources
+      call <- """\.localCheckpoint\(|Stage\.materialize\w*\(""".r.findAllIn(body)
+      allowedIn = if (call.startsWith(".")) "plans/Fence.scala" else "plans/"
+      if !f.startsWith(allowedIn)
+    } yield s"$f: $call"
+    assert(bad.isEmpty, bad.mkString("fence through graft.plans.Fence:\n", "\n", ""))
+  }
+
+  test("Fence.bounded: a streaming frame passes through untouched; a " +
+    "batch frame comes back checkpointed with the same rows") {
+    import graft.plans.Fence
+    val stream = spark.readStream.format("rate").load()
+    assert(Fence.bounded(stream) eq stream)
+    val batch = spark.range(0, 50).selectExpr("id", "id * id AS sq")
+    val fenced = Fence.bounded(batch)
+    assert(fenced.queryExecution.analyzed.collectLeaves().map(_.nodeName) ==
+      Seq("LogicalRDD"))
+    assert(fenced.orderBy("id").collect().toSeq ==
+      batch.orderBy("id").collect().toSeq)
+  }
+
+  test("knob inventory: every conf key, env var and system property " +
+    "src/main reads is listed here with the reason it stays") {
+    val listed = Set(
+      graft.plans.Stage.DirKey, // deployment path: a shared filesystem
+      "graft.stage.bucketTargetBytes", // deployment sizing; PlanSpec pins it
+      "graft.scan.parallelismFloor", // tests run it off; PlanSpec pins both
+      "SPARK_GRAFT_SF_DIR", // Bench input directory
+      "SPARK_GRAFT_CPUS", // Bench/Verify local[N] width
+      "SPARK_GRAFT_ONLY", // Bench probe: a subset of the queries
+      "PLAN_CONF", // PlanAudit: session confs of the audited plans
+      "PLAN_FULL") // PlanAudit: print whole plans
+    // the first argument of each conf / env / property read: a string
+    // literal, or a named constant mapped below (anything else fails)
+    val read = ("""(?:conf\.get\w*|getConfString|sys\.(?:env|props)""" +
+      """(?:\.\w+)?|System\.get(?:env|Property))\s*\(\s*"?([\w.]+)""").r
+    val found = mainSources.flatMap { case (_, body) =>
+      read.findAllMatchIn(body).map(_.group(1)) }
+      .map(k => if (k == "DirKey") graft.plans.Stage.DirKey else k).toSet
+    assert(found == listed, s"added: ${found -- listed}; gone: ${listed -- found}")
   }
 }
