@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.functions.{GraftFunctions, TextOps}
 import graft.plans.Fence
@@ -1125,20 +1126,33 @@ object Dedup {
     * A~B and B~C, pair-wise "keep the smaller id" would wrongly keep
     * both A and C).
     *
-    * HashMin label propagation: every node starts as its own label; each
-    * round takes the min of its neighbors' labels; converges to the
-    * component-minimum id in O(component diameter) rounds. Each round is
-    * one distributed join + partial-aggregated min — the standard
-    * MapReduce-era algorithm, still the right shape at 100 TB. The
-    * driver loop iterates over ROUND COUNTS (small), never over data;
-    * each round's label table goes behind a durable stage fence
-    * ([[graft.plans.Fence.corpus]]) so lineage stays constant-depth
-    * and an executor loss replays a file scan, not the whole
-    * propagation history.
+    * Two size tiers, the two tiers of [[graft.plans.Fence]]. The
+    * symmetric edge list is staged first (`cc_sym`,
+    * [[graft.plans.Fence.corpusBucketed]]); then
+    * [[graft.plans.Fence.driverBounded]] compares the staged parquet
+    * bytes with its fixed driver bound (10 MB).
     *
-    * Near-dup graphs are overwhelmingly tiny cliques + chains (diameter
-    * 1-3), so convergence is fast; `maxIter` only bounds adversarial
-    * chains.
+    *  - DRIVER tier (staged bytes within the bound): the staged
+    *    edges are collected once, as primitive id arrays, and
+    *    union-find runs in the driver (union toward the smaller root,
+    *    path compression); the stage is reclaimed and the labels come
+    *    back as a local frame. It always converges fully — every node
+    *    gets the minimum id of its whole component, which is what the
+    *    recursive-CTE oracles compute — so `maxIter` does not apply.
+    *  - CORPUS tier (anything larger): HashMin label propagation. Every
+    *    node starts as its own label; each round takes the min of its
+    *    neighbors' labels; converges to the component-minimum id in
+    *    O(component diameter) rounds (fewer with the pointer jump
+    *    below). Each round is one distributed join + partial-aggregated
+    *    min — the standard MapReduce-era algorithm, still the right
+    *    shape at 100 TB. The driver loop iterates over ROUND COUNTS
+    *    (small), never over data; each round's label table goes behind
+    *    a durable stage fence ([[graft.plans.Fence.corpus]]) so lineage
+    *    stays constant-depth and an executor loss replays a file scan,
+    *    not the whole propagation history. `maxIter` bounds the relax
+    *    rounds of this tier only; near-dup graphs are overwhelmingly
+    *    tiny cliques + chains (diameter 1-3), so it only bites on
+    *    adversarial chains.
     *
     * Input: edges (a, b) — undirected, any orientation. Pass
     * `edgesSymmetric = true` when the input ALREADY contains both
@@ -1147,7 +1161,12 @@ object Dedup {
     * swap-union is skipped, halving the staged edge volume and every
     * round's join fan-in — VERDICT r11 #2 found the DBSCAN chain
     * staging each core edge twice for exactly this reason.
-    * Output: node, component (= min node id reachable).
+    * An edge with a null endpoint links nothing and is dropped before
+    * staging, so both tiers see the same non-null edge list.
+    * Output: node, component (= min node id reachable); the nodes are
+    * the staged `a` ids. A node that appears only on a dropped edge has
+    * no row: every consumer left-joins its ids and falls back to the id
+    * itself.
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 20,
       edgesSymmetric: Boolean = false): DataFrame = {
@@ -1163,11 +1182,26 @@ object Dedup {
     // of killing the job (the localCheckpoint failure mode).
     val base = edges.select(col("a").cast("long").as("a"),
       col("b").cast("long").as("b"))
+      .where(col("a").isNotNull && col("b").isNotNull)
     val sym = Fence.corpusBucketed(
       if (edgesSymmetric) base
-      else base.unionAll(edges.select(col("b").cast("long").as("a"),
-        col("a").cast("long").as("b"))),
+      else base.unionAll(base.select(col("b").as("a"), col("a").as("b"))),
       "cc_sym", "b")
+    if (Fence.driverBounded(sym)) {
+      // DRIVER tier: ONE job brings the stage back as primitive columns
+      // (per partition: its a ids and its b ids), never as boxed Rows
+      val parts = sym.rdd.mapPartitions { rows =>
+        val as = Array.newBuilder[Long]
+        val bs = Array.newBuilder[Long]
+        rows.foreach { r => as += r.getLong(0); bs += r.getLong(1) }
+        Iterator((as.result(), bs.result()))
+      }.collect()
+      Fence.reclaim(sym)
+      return spark.createDataFrame(
+        unionFind(parts.flatMap(_._1), parts.flatMap(_._2)),
+        StructType(Seq(StructField("node", LongType),
+          StructField("component", LongType))))
+    }
     // Round 1 fused into initialization: a node's first propagated label
     // is min(self, neighbors), which is one groupBy over the symmetric
     // edge list — no join. (The classic formulation spends a full
@@ -1289,6 +1323,45 @@ object Dedup {
       batch = math.min(batch * 2, batchCap)
     }
     labels
+  }
+
+  /** [[connectedComponents]]' driver tier over the collected edges
+    * (a(i), b(i)). The endpoint ids are sorted and deduplicated, so a
+    * node's array index is its rank: uniting toward the smaller root
+    * index keeps every root at its component's minimum id, and a sorted
+    * `Array[Long]` with binary search is the id-to-index map (no boxed
+    * map). Returns the (node, component) rows of the `a` ids, in id
+    * order. */
+  private def unionFind(a: Array[Long], b: Array[Long])
+      : java.util.List[Row] = {
+    val all = java.util.Arrays.copyOf(a, a.length + b.length)
+    System.arraycopy(b, 0, all, a.length, b.length)
+    java.util.Arrays.sort(all)
+    var m = 0
+    for (i <- all.indices) if (m == 0 || all(i) != all(m - 1)) {
+      all(m) = all(i); m += 1
+    }
+    val ids = java.util.Arrays.copyOf(all, m)
+    def idx(v: Long): Int = java.util.Arrays.binarySearch(ids, v)
+    val parent = Array.tabulate(m)(identity)
+    def find(i: Int): Int = {
+      var root = i
+      while (parent(root) != root) root = parent(root)
+      var j = i // path compression: point the whole path at the root
+      while (parent(j) != root) { val up = parent(j); parent(j) = root; j = up }
+      root
+    }
+    val isNode = new Array[Boolean](m)
+    for (i <- a.indices) {
+      val ia = idx(a(i))
+      isNode(ia) = true
+      val ra = find(ia)
+      val rb = find(idx(b(i)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    val out = new java.util.ArrayList[Row](m)
+    for (i <- 0 until m) if (isNode(i)) out.add(Row(ids(i), ids(find(i))))
+    out
   }
 
   /** Canonical-document assignment: every doc mapped to the minimum id of

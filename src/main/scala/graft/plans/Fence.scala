@@ -26,6 +26,14 @@ import org.apache.spark.sql.DataFrame
   *    micro-batch): executor-local checkpoint is the right fence —
   *    cheaper than a filesystem round-trip, and losing it re-runs a
   *    bounded computation, not a corpus pass.
+  *
+  * When a frame's tier is only known once it is written, the same rule
+  * is asked of the stage: [[driverBounded]] answers whether a staged
+  * frame is small enough to collect (a fixed 10 MB of parquet). Its
+  * one caller is `Dedup.connectedComponents`, which stages its
+  * symmetric edge list with [[corpusBucketed]] and then runs
+  * union-find in the driver when the stage is driver-bounded, HashMin
+  * rounds over the stage when it is not.
   */
 object Fence {
 
@@ -49,6 +57,24 @@ object Fence {
     * stream owner already accepted). */
   def bounded(df: DataFrame): DataFrame =
     if (df.isStreaming) df else df.localCheckpoint(true)
+
+  /** True when a frame the stage writer returned is DRIVER-BOUNDED:
+    * its staged parquet bytes are within the driver bound, 10 MB
+    * (Spark's default broadcast bound on the same kind of bytes). A
+    * fixed constant, so no join-tuning setting changes which algorithm
+    * a caller runs, and a corpus-sized stage is never collected. One
+    * filesystem stat, no job. False for a frame that did not come from
+    * the stage writer. */
+  def driverBounded(staged: DataFrame): Boolean = {
+    val bytes = Stage.stagedBytes(staged)
+    bytes >= 0 && bytes <= driverBoundBytes.value
+  }
+
+  /** The driver bound in bytes. Tests lower it for one block with
+    * `driverBoundBytes.withValue(-1L) { ... }`, which makes no stage
+    * driver-bounded (the corpus tier of every size-tiered caller). */
+  private[graft] val driverBoundBytes =
+    new scala.util.DynamicVariable[Long](10L * 1024 * 1024)
 
   /** Eagerly reclaim a SUPERSEDED [[corpus]]/[[corpusBucketed]] frame
     * — the iterative-operator discipline: once round N+1's fence has

@@ -186,6 +186,26 @@ object Stage {
     }
   }
 
+  /** Bytes on disk under a staged path (one filesystem stat, no job);
+    * -1 when the stat fails. */
+  private def pathBytes(spark: SparkSession, path: String): Long =
+    try {
+      val p = new Path(path)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getContentSummary(p).getLength
+    } catch { case NonFatal(_) => -1L }
+
+  /** Staged parquet bytes behind a frame a materialize returned — the
+    * size rule's input for [[Fence.driverBounded]]; -1 for a frame this
+    * writer did not stage (or a failed stat). */
+  private[plans] def stagedBytes(df: DataFrame): Long =
+    stagedPath(df).map(pathBytes(df.sparkSession, _)).getOrElse(-1L)
+
+  /** Per-bucket byte target of an adaptive bucketed stage. */
+  private def bucketTargetBytes(spark: SparkSession): Long =
+    spark.conf.getOption("graft.stage.bucketTargetBytes")
+      .map(_.toLong).getOrElse(32L * 1024 * 1024)
+
   /** Test/debug hook: the staged path behind a materialized frame
     * (None if `df` is not a live staged read-back). */
   private[graft] def stagedPath(df: DataFrame): Option[String] =
@@ -236,8 +256,7 @@ object Stage {
   private def adaptiveBuckets(df: DataFrame): Int = {
     val spark = df.sparkSession
     val cap = spark.sessionState.conf.numShufflePartitions
-    val target = spark.conf.getOption("graft.stage.bucketTargetBytes")
-      .map(_.toLong).getOrElse(32L * 1024 * 1024)
+    val target = bucketTargetBytes(spark)
     val est =
       try df.queryExecution.optimizedPlan.stats.sizeInBytes
       catch { case NonFatal(_) => BigInt(-1) }
@@ -271,13 +290,8 @@ object Stage {
     // entirely: one filesystem stat is the only added cost, and the
     // original single write stands.
     if (buckets == 0 && nb > 1) {
-      val target = spark.conf.getOption("graft.stage.bucketTargetBytes")
-        .map(_.toLong).getOrElse(32L * 1024 * 1024)
-      val actual = try {
-        val p = new Path(path)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .getContentSummary(p).getLength
-      } catch { case NonFatal(_) => -1L }
+      val target = bucketTargetBytes(spark)
+      val actual = pathBytes(spark, path)
       if (target > 0 && actual >= 0 && actual < 8 * target) {
         val needed = math.max(1L, (actual + target - 1) / target).toInt
         if (needed * 4 <= nb) {

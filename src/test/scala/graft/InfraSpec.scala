@@ -3388,70 +3388,112 @@ class InfraSpec extends SparkTestBase {
     assert(nfDf.count() > liveDf.count())
   }
 
+  /** Stage directories under the default stage root whose name starts
+    * with `prefix`. */
+  private def stageDirs(prefix: String): Set[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    val stageRoot = java.nio.file.Paths.get("target/stage")
+    if (!Files.exists(stageRoot)) Set.empty
+    else Files.walk(stageRoot).iterator().asScala
+      .filter(p => Files.isDirectory(p) &&
+        p.getFileName.toString.startsWith(prefix)).toSet
+  }
+
   test("bucketed stage: exactly one file per bucket (chokepoint " +
     "repartition), edgesSymmetric halves the staged edge volume, and " +
     "superseded label stages are reclaimed in-session") {
-    import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
     import graft.operators.Dedup
-    val stageRoot = Paths.get("target/stage")
-    def stageDirs(prefix: String): Set[java.nio.file.Path] =
-      if (!Files.exists(stageRoot)) Set.empty
-      else Files.walk(stageRoot).iterator().asScala
-        .filter(p => Files.isDirectory(p) &&
-          p.getFileName.toString.startsWith(prefix)).toSet
-    // a diameter-12 chain: HashMin needs multiple geometric batches
-    // (1,2,4,4,...), so the in-session reclaim of superseded cc_labels
-    // stages actually fires
-    val chain = spark.range(0, 12).toDF("a")
+    // the HashMin tier, whose stages this test pins
+    onCorpusTier {
+      // a diameter-12 chain: HashMin needs multiple geometric batches
+      // (1,2,4,4,...), so the in-session reclaim of superseded cc_labels
+      // stages actually fires
+      val chain = spark.range(0, 12).toDF("a")
+        .select(col("a"), (col("a") + 1).as("b"))
+      val symBefore = stageDirs("cc_sym_")
+      val labBefore = stageDirs("cc_labels_")
+      val r1 = Dedup.connectedComponents(chain, maxIter = 20)
+      assert(r1.collect().forall(_.getLong(1) == 0L))
+      val symRaw = (stageDirs("cc_sym_") -- symBefore).toSeq
+      assert(symRaw.size == 1)
+      // 1. ONE file per (non-empty) bucket — the chokepoint repartition
+      // guarantee; without it a T-task upstream writes up to T x 4 files.
+      // File names carry the bucket id suffix (_000N before .c000), so
+      // "one per bucket" is |files| == |distinct bucket ids| and <= 4.
+      val dataFiles = Files.list(symRaw.head).iterator().asScala
+        .map(_.getFileName.toString).filter(_.startsWith("part-")).toSeq
+      val bucketIds = dataFiles.map(_.split("_").last.take(5)).distinct
+      assert(dataFiles.size <= 4 && dataFiles.size == bucketIds.size,
+        s"bucketed stage wrote ${dataFiles.size} files over " +
+          s"${bucketIds.size} buckets (want one file per bucket, <= 4)")
+      // 2. raw input stages both directions: 12 edges -> 24 rows
+      assert(spark.read.parquet(symRaw.head.toString).count() == 24)
+      // 3. pre-symmetrized input + the flag stages HALF of what the
+      // no-flag path would (the VERDICT r11 #2 DBSCAN double-staging):
+      // same 24-row symmetric frame, staged as 24, not 48 — and the
+      // labels are identical
+      val symInput = chain.unionAll(
+        chain.select(col("b").as("a"), col("a").as("b")))
+      val mid = stageDirs("cc_sym_")
+      val r2 = Dedup.connectedComponents(symInput, maxIter = 20,
+        edgesSymmetric = true)
+      assert(r2.orderBy("node").collect().toSeq ==
+        r1.orderBy("node").collect().toSeq)
+      val symFlag = (stageDirs("cc_sym_") -- mid).toSeq
+      assert(symFlag.size == 1)
+      assert(spark.read.parquet(symFlag.head.toString).count() == 24,
+        "edgesSymmetric=true must stage each directed edge once")
+      // 4. in-session reclamation: the chain runs >= 3 label batches but
+      // only each run's FINAL label stage survives (superseded ones are
+      // deleted once the next batch's write commits)
+      val labAfter = stageDirs("cc_labels_") -- labBefore
+      assert(labAfter.size == 2, // one surviving stage per CC run above
+        s"expected 2 surviving cc_labels stages, found ${labAfter.size} " +
+          s"(${labAfter.mkString(", ")})")
+      // 5. reclaiming a bucketed stage drops its catalog table AND dir
+      val nTables = spark.catalog.listTables()
+        .filter(col("name").startsWith("graft_stage_")).count()
+      assert(nTables >= 2) // the two cc_sym stages above
+      graft.plans.Stage.reclaim(r1) // labels stage: dir must vanish
+      val live = stageDirs("cc_labels_") -- labBefore
+      assert(live.size == 1, s"reclaim left ${live.size} label stages")
+    }
+  }
+
+  test("connectedComponents driver tier: a driver-bounded edge stage is " +
+    "collected once and solved in the driver — no cc_labels stage, the " +
+    "cc_sym stage reclaimed before the call returns, a pinned job count") {
+    import org.apache.spark.TestBus
+    import graft.operators.Dedup
+    val chain = spark.range(0, 12).toDF("a") // diameter 12
       .select(col("a"), (col("a") + 1).as("b"))
     val symBefore = stageDirs("cc_sym_")
     val labBefore = stageDirs("cc_labels_")
-    val r1 = Dedup.connectedComponents(chain, maxIter = 20)
-    assert(r1.collect().forall(_.getLong(1) == 0L))
-    val symRaw = (stageDirs("cc_sym_") -- symBefore).toSeq
-    assert(symRaw.size == 1)
-    // 1. ONE file per (non-empty) bucket — the chokepoint repartition
-    // guarantee; without it a T-task upstream writes up to T x 4 files.
-    // File names carry the bucket id suffix (_000N before .c000), so
-    // "one per bucket" is |files| == |distinct bucket ids| and <= 4.
-    val dataFiles = Files.list(symRaw.head).iterator().asScala
-      .map(_.getFileName.toString).filter(_.startsWith("part-")).toSeq
-    val bucketIds = dataFiles.map(_.split("_").last.take(5)).distinct
-    assert(dataFiles.size <= 4 && dataFiles.size == bucketIds.size,
-      s"bucketed stage wrote ${dataFiles.size} files over " +
-        s"${bucketIds.size} buckets (want one file per bucket, <= 4)")
-    // 2. raw input stages both directions: 12 edges -> 24 rows
-    assert(spark.read.parquet(symRaw.head.toString).count() == 24)
-    // 3. pre-symmetrized input + the flag stages HALF of what the
-    // no-flag path would (the VERDICT r11 #2 DBSCAN double-staging):
-    // same 24-row symmetric frame, staged as 24, not 48 — and the
-    // labels are identical
-    val symInput = chain.unionAll(
-      chain.select(col("b").as("a"), col("a").as("b")))
-    val mid = stageDirs("cc_sym_")
-    val r2 = Dedup.connectedComponents(symInput, maxIter = 20,
-      edgesSymmetric = true)
-    assert(r2.orderBy("node").collect().toSeq ==
-      r1.orderBy("node").collect().toSeq)
-    val symFlag = (stageDirs("cc_sym_") -- mid).toSeq
-    assert(symFlag.size == 1)
-    assert(spark.read.parquet(symFlag.head.toString).count() == 24,
-      "edgesSymmetric=true must stage each directed edge once")
-    // 4. in-session reclamation: the chain runs >= 3 label batches but
-    // only each run's FINAL label stage survives (superseded ones are
-    // deleted once the next batch's write commits)
-    val labAfter = stageDirs("cc_labels_") -- labBefore
-    assert(labAfter.size == 2, // one surviving stage per CC run above
-      s"expected 2 surviving cc_labels stages, found ${labAfter.size} " +
-        s"(${labAfter.mkString(", ")})")
-    // 5. reclaiming a bucketed stage drops its catalog table AND dir
-    val nTables = spark.catalog.listTables()
-      .filter(col("name").startsWith("graft_stage_")).count()
-    assert(nTables >= 2) // the two cc_sym stages above
-    graft.plans.Stage.reclaim(r1) // labels stage: dir must vanish
-    val live = stageDirs("cc_labels_") -- labBefore
-    assert(live.size == 1, s"reclaim left ${live.size} label stages")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    TestBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(counter)
+    val r = try Dedup.connectedComponents(chain, maxIter = 20)
+    finally {
+      TestBus.drain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(counter)
+    }
+    assert(stageDirs("cc_labels_") == labBefore,
+      "the driver tier wrote a cc_labels stage")
+    assert(stageDirs("cc_sym_") == symBefore,
+      "the cc_sym stage outlived the call")
+    // the cc_sym write (a shuffle job and a write job under AQE) and
+    // the one collect; the corpus tier of the same call ran 43 jobs up
+    // to and including its result's collect
+    assert(jobs.get == 3, s"driver tier ran ${jobs.get} jobs")
+    assert(r.collect().map(x => (x.getLong(0), x.getLong(1))).sorted.toSeq ==
+      (0L to 12L).map((_, 0L)))
   }
 
   /** (path under src/main/scala/graft, body) for every main source. */

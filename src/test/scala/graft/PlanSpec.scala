@@ -204,13 +204,22 @@ class PlanSpec extends SparkTestBase {
 
   test("q86: the pack-input fence holds — the dedup-gate upstream " +
     "evaluates once, not once per prefix-sum phase") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
     val q = SparkEntry.allQueries.find(_.name == "q86_corpus_build").get
-    val p = q.run(spark, sf).queryExecution.executedPlan.toString
+    val qe = q.run(spark, sf).queryExecution
+    val p = qe.executedPlan.toString
     // round 11: the pack-input fence is the durable stage writer — the
     // plan reads the staged pack_docs parquet, and the dedup-gate
-    // upstream ran once, inside the stage write
-    assert(p.contains("target/stage/") && p.contains("pack_docs"),
-      s"pack input not staged:\n$p")
+    // upstream ran once, inside the stage write. The scans' root paths
+    // are read from the plan nodes: the plan STRING truncates a scan's
+    // Location at spark.sql.maxMetadataStringLength, so a longer
+    // checkout path would cut the stage name off
+    val scanned = qe.sparkPlan.collect {
+      case s: FileSourceScanExec => s.relation.location.rootPaths
+    }.flatten
+    assert(scanned.exists(r => r.getName.startsWith("pack_docs_") &&
+      r.toString.contains("/target/stage/")),
+      s"pack input not staged; scans read ${scanned.mkString(", ")}:\n$p")
     val ex = "Exchange ".r.findAllIn(p).length
     assert(ex <= 8, s"q86 exchange count regressed to $ex (fence lost?)")
   }

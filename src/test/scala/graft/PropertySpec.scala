@@ -610,4 +610,116 @@ class PropertySpec extends SparkTestBase {
       assert(classifyDrift(m, relabeled, read, read).verdict == "no-prior")
     }
   }
+
+  // ---- connected components: driver tier vs corpus tier ----------------
+
+  private type Edge = (Option[Long], Option[Long])
+
+  /** Cliques of 1-5 nodes (a 1-node clique is a self-loop) over distinct
+    * random ids in [-500, 500]; returns the cliques' id groups. */
+  private def cliquesGen(n: Int): Gen[Seq[Seq[Long]]] = for {
+    sizes <- Gen.listOfN(n, Gen.choose(1, 5))
+    ids <- Gen.pick(sizes.sum, -500L to 500L)
+  } yield sizes.scanLeft(0)(_ + _).zip(sizes).map { case (lo, n) =>
+    ids.toSeq.slice(lo, lo + n) }
+
+  private def cliqueEdges(c: Seq[Long]): Seq[(Long, Long)] =
+    if (c.size == 1) Seq((c.head, c.head))
+    else for (x <- c; y <- c if x < y) yield (x, y)
+
+  /** Random graphs: two chains longer than `relaxRounds`, three
+    * cliques, extra self-loops and duplicated edges, null endpoints
+    * (an id whose only edge is to null, nulls on linked ids, a (null,
+    * null) edge), each edge in a random orientation. A `monotone` chain
+    * runs through its ids in ascending or descending order, the shape
+    * whose convergence HashMin's pointer jumps guarantee within 8 relax
+    * rounds up to 32 nodes; any other chain visits its ids in random
+    * order. */
+  private def ccGraphGen(relaxRounds: Int, monotone: Boolean): Gen[Seq[Edge]] = for {
+    lens <- Gen.listOfN(2, Gen.choose(relaxRounds + 2, 3 * relaxRounds))
+    chainIds <- Gen.pick(lens.sum, 501L to 2000L)
+    keys <- Gen.listOfN(lens.sum, Gen.choose(0, Int.MaxValue))
+    negate <- Gen.listOfN(lens.sum, Gen.prob(0.5))
+    descending <- Gen.listOfN(2, Gen.prob(0.5))
+    cliques <- cliquesGen(3)
+    ids = chainIds.toSeq.zip(negate).map { case (x, n) => if (n) -x else x }
+      .zip(keys).sortBy(_._2).map(_._1)
+    chains = Seq(ids.take(lens.head), ids.drop(lens.head)).zip(descending)
+      .map { case (c, d) =>
+        if (!monotone) c else if (d) c.sorted.reverse else c.sorted }
+    structural = chains.flatMap(c => c.zip(c.tail)) ++
+      cliques.flatMap(cliqueEdges)
+    loops <- Gen.someOf(ids ++ cliques.flatten)
+    dups <- Gen.someOf(structural)
+    nulled <- Gen.someOf(ids ++ cliques.flatten)
+    nullNull <- Gen.prob(0.5)
+    linked = (structural ++ loops.take(4).map(x => (x, x)) ++ dups.take(6))
+      .map { case (x, y) => (Option(x), Option(y)) }
+    withNulls = linked ++ (nulled.take(3).toSeq :+ -2001L)
+      .map(x => (Option(x), Option.empty[Long])) ++
+      (if (nullNull) Seq((Option.empty[Long], Option.empty[Long])) else Nil)
+    flips <- Gen.listOfN(withNulls.size, Gen.prob(0.5))
+  } yield flips.zip(withNulls).map { case (f, e) => if (f) e.swap else e }
+
+  /** Test-local reference: BFS over the edges without a null endpoint
+    * gives every id its component minimum; the nodes are the `a` ids of
+    * those edges once symmetrized. */
+  private def ccReference(edges: Seq[Edge], symmetric: Boolean)
+      : Seq[(Long, Long)] = {
+    val linked = edges.collect { case (Some(x), Some(y)) => (x, y) }
+    val sym = if (symmetric) linked else linked ++ linked.map(_.swap)
+    val adj = sym.groupMap(_._1)(_._2)
+    val comp = scala.collection.mutable.Map.empty[Long, Long]
+    for (s <- sym.map(_._1).distinct.sorted if !comp.contains(s)) {
+      var frontier = Seq(s) // ascending order: s is its component's min
+      comp(s) = s
+      while (frontier.nonEmpty) {
+        frontier = frontier.flatMap(adj.getOrElse(_, Nil))
+          .filterNot(comp.contains).distinct
+        frontier.foreach(comp(_) = s)
+      }
+    }
+    sym.map(_._1).distinct.map(x => (x, comp(x))).sorted
+  }
+
+  test("connectedComponents: the driver tier (union-find) and the corpus " +
+    "tier (HashMin) agree row-for-row, and with a BFS reference, on " +
+    "random graphs: long chains, cliques, self-loops, duplicates, both " +
+    "orientations, symmetric inputs, negative ids, null endpoints") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import graft.operators.Dedup
+    def rows(df: DataFrame): Seq[(Long, Long)] =
+      df.collect().toSeq.map(r => (r.getLong(0), r.getLong(1))).sorted
+    def symmetrized(es: Seq[Edge], symmetric: Boolean): Seq[Edge] =
+      if (symmetric) es ++ es.map(_.swap) else es
+    // maxIter 8 = 8 relax rounds; every chain is longer, so the corpus
+    // tier only converges through its pointer jumps
+    val maxIter = 8
+    for ((g, i) <- samples(ccGraphGen(maxIter, monotone = true), 6)
+        .zipWithIndex) {
+      val symmetric = i % 2 == 1
+      val df = symmetrized(g, symmetric).toDF("a", "b")
+      val driver = Dedup.connectedComponents(df, maxIter, symmetric)
+      assert(driver.queryExecution.analyzed.isInstanceOf[LocalRelation],
+        "the driver tier was not taken under the driver bound")
+      val corpus = onCorpusTier {
+        Dedup.connectedComponents(df, maxIter, symmetric)
+      }
+      assert(!corpus.queryExecution.analyzed.isInstanceOf[LocalRelation])
+      val want = ccReference(symmetrized(g, symmetric), symmetric)
+      assert(rows(driver) == want, s"driver tier vs reference, sample $i")
+      assert(rows(corpus) == want, s"corpus tier vs reference, sample $i")
+      assert(driver.schema == corpus.schema)
+    }
+    // random-order chains, which the corpus tier does not converge
+    // within the same relax budget: the driver tier against the
+    // reference only
+    for ((g, i) <- samples(ccGraphGen(maxIter, monotone = false), 3)
+        .zipWithIndex) {
+      val got = Dedup.connectedComponents(g.toDF("a", "b"), maxIter)
+      assert(rows(got) == ccReference(g, symmetric = false),
+        s"driver tier vs reference, random-order sample $i")
+    }
+  }
 }

@@ -34,4 +34,10 @@ object SparkTestBase {
 
 abstract class SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.spark
+
+  /** Run `body` with the driver bound of `Fence.driverBounded` at -1,
+    * so no staged frame is driver-bounded and
+    * `Dedup.connectedComponents` takes its corpus (HashMin) tier. */
+  protected def onCorpusTier[A](body: => A): A =
+    graft.plans.Fence.driverBoundBytes.withValue(-1L)(body)
 }

@@ -1,5 +1,8 @@
 package graft.tools
 
+import scala.util.control.NonFatal
+
+import org.apache.spark.TestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
@@ -74,27 +77,33 @@ object JobProfile {
     // one warm pass (JIT/codegen), then the profiled pass
     qs.foreach { q =>
       try q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => println(s"[profile] warm ${q.name} failed: $e") }
+      catch { case NonFatal(e) => println(s"[profile] warm ${q.name} failed: $e") }
     }
+    // listener events are async: the scheduler posts a job's JobEnd
+    // before the action returns, so once the bus is drained every job
+    // of the finished query has its row. A drain that times out is
+    // reported, and the rows seen so far are printed.
+    def drain(): Unit =
+      try TestBus.drain(spark.sparkContext)
+      catch { case e: java.util.concurrent.TimeoutException =>
+        println(s"[profile] listener bus not drained: $e") }
     qs.foreach { q =>
+      drain()
       rows.clear()
       spark.sparkContext.setJobDescription(s"${q.name}")
       val t0 = System.nanoTime()
-      try q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => println(s"[profile] ${q.name} failed: $e") }
+      val failure =
+        try { q.run(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
+        catch { case NonFatal(e) => Some(e) }
       val total = (System.nanoTime() - t0) / 1e9
       spark.sparkContext.setJobDescription(null)
-      // listener events are async: poll until the row count stabilizes
-      // (a fixed sleep dropped late onJobEnd rows on a loaded bus —
-      // round-19 ADVICE), bounded at 3 s
-      var prev = -1
-      var waited = 0
-      while (rows.size != prev && waited < 3000) {
-        prev = rows.size
-        Thread.sleep(150)
-        waited += 150
+      drain()
+      failure match {
+        case Some(e) =>
+          println(f"%n==== ${q.name}: FAILED after ${rows.size} jobs: $e ====")
+        case None =>
+          println(f"%n==== ${q.name}: total $total%.3f s, ${rows.size} jobs ====")
       }
-      println(f"%n==== ${q.name}: total $total%.3f s, ${rows.size} jobs ====")
       val it = rows.iterator()
       var sum = 0.0
       while (it.hasNext) {
