@@ -136,47 +136,41 @@ object LegacyViews {
 
   private val publicLinks = Seq("ndt_all", "ndt_downloads", "ndt_uploads")
 
-  /** Deploy the legacy lineage (idempotent catalog DDL; assumes — and
-    * ensures — the base layer via [[ReferenceViews.deploy]]'s memo).
-    * Returns the qualified `_legacysql` names in deploy order. */
   /** The PLX bottom layer BOTH make_views.sh scripts assume
     * pre-exists (`LEGACY=${PROJECT}:legacy` is only `bq mk`'d):
     * era-filtered views of the archive, shared by the legacySQL and
     * standardSQL lineage deploys. */
   private[catalog] def ensureBottom(spark: SparkSession): Unit = {
-    def sql(s: String): Unit = { spark.sql(s); () }
-    sql(s"CREATE DATABASE IF NOT EXISTS $LegacyDs")
-    sql(s"CREATE OR REPLACE VIEW $LegacyDs.ndt AS SELECT * FROM " +
-      s"$P.base_tables.archive WHERE experiment = 'ndt' AND " +
-      s"datatype = 'web100' AND date >= $Pre2015Boundary AND " +
-      s"date < $EtlBoundary")
-    sql(s"CREATE OR REPLACE VIEW $LegacyDs.ndt_pre2015 AS SELECT * " +
-      s"FROM $P.base_tables.archive WHERE experiment = 'ndt' AND " +
-      s"datatype = 'web100' AND date < $Pre2015Boundary")
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS $LegacyDs")
+    ViewRegistry.createLevels(spark, Seq(Seq(
+      s"$LegacyDs.ndt" -> (s"SELECT * FROM $P.base_tables.archive WHERE " +
+        s"experiment = 'ndt' AND datatype = 'web100' AND " +
+        s"date >= $Pre2015Boundary AND date < $EtlBoundary"),
+      s"$LegacyDs.ndt_pre2015" -> (s"SELECT * FROM $P.base_tables.archive " +
+        s"WHERE experiment = 'ndt' AND datatype = 'web100' AND " +
+        s"date < $Pre2015Boundary"))))
   }
 
+  /** Deploy the legacy lineage (idempotent catalog DDL; assumes — and
+    * ensures — the base layer via [[ReferenceViews.deploy]]'s memo).
+    * Returns the qualified `_legacysql` names in deploy order. */
   def deploy(spark: SparkSession, sfDir: String): Seq[String] = {
     ReferenceViews.deploy(spark, sfDir)
-    def sql(s: String): Unit = { spark.sql(s); () }
     (Seq(LegacyDs, IntermediateDs, PublicDs) ++ Aliases)
-      .foreach(ds => sql(s"CREATE DATABASE IF NOT EXISTS $ds"))
+      .foreach(ds => spark.sql(s"CREATE DATABASE IF NOT EXISTS $ds"))
     ensureBottom(spark)
+    // the lineage is created in make_views.sh order, one view per
+    // level; the links all read the lineage, so they are one level
     val stacked = lineage.map { case (ds, name, body) =>
-      val qn = s"$ds.${name}_legacysql"
-      sql(s"CREATE OR REPLACE VIEW $qn AS " +
-        LegacySql.translate(body, vars = vars(ds)))
-      qn
+      s"$ds.${name}_legacysql" -> LegacySql.translate(body, vars = vars(ds))
     }
     val links = for (ds <- PublicDs +: Aliases; name <- publicLinks)
-      yield {
-        val qn = s"$ds.${name}_legacysql"
-        sql(s"CREATE OR REPLACE VIEW $qn AS " + LegacySql.translate(
-          s"""#legacySQL
-             |SELECT * FROM [$${INTERMEDIATE}.${name}_legacysql]"""
-            .stripMargin,
-          vars = vars(ds)))
-        qn
-      }
-    stacked ++ links
+      yield s"$ds.${name}_legacysql" -> LegacySql.translate(
+        s"""#legacySQL
+           |SELECT * FROM [$${INTERMEDIATE}.${name}_legacysql]"""
+          .stripMargin,
+        vars = vars(ds))
+    ViewRegistry.createLevels(spark, stacked.map(Seq(_)) :+ links)
+    (stacked ++ links).map(_._1)
   }
 }

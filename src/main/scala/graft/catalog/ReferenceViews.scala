@@ -97,7 +97,10 @@ object ReferenceViews {
     * Here that layer is one external parquet table + the normalized
     * `archive` view + per-experiment raw datasets, created BEFORE the
     * manifest deploys. Idempotent; re-binding to a new sfDir replaces
-    * the external table.
+    * the external table. The ownership guard, `events_raw` and
+    * `archive` run in that order on the calling thread; the 37 views of
+    * [[rawLayer]] then go through [[ViewRegistry.createLevels]] as one
+    * level.
     *
     * SINGLE-SESSION-PER-METASTORE CONTRACT (ADVICE r12, ENFORCED
     * r14): the catalog objects created here carry the reference's OWN
@@ -163,18 +166,28 @@ object ReferenceViews {
       m => s"CAST($m AS STRING)")
     sql("CREATE OR REPLACE VIEW base_tables.archive AS SELECT " +
       cols.mkString(", ") + s" FROM $Project.base_tables.events_raw")
+    rawLayer.map(_._1.takeWhile(_ != '.')).distinct
+      .foreach(db => sql(s"CREATE DATABASE IF NOT EXISTS $db"))
+    ViewRegistry.createLevels(spark, Seq(rawLayer))
+  }
+
+  /** The raw-table layer over `base_tables.archive`, as (qualified
+    * name, body): the legacy bottom tables, the global sidestream, the
+    * per-experiment raw datasets and the autoload tables. Each body
+    * reads `archive` only, so [[registerBase]] creates the layer as one
+    * level. */
+  private[graft] val rawLayer: Seq[(String, String)] = {
     def filtered(pred: String): String =
       s"SELECT a.*, 'v2' AS parser FROM $Project.base_tables.archive a" +
         s" WHERE $pred"
     // legacy bottom tables (base_tables.<x>): the old parser's outputs
-    for (d <- Seq("ndt" -> "web100", "ndt5" -> "ndt5",
+    val bottom = for (d <- Seq("ndt" -> "web100", "ndt5" -> "ndt5",
         "tcpinfo" -> "tcpinfo", "paris1" -> "paris1",
         "switch" -> "switch"))
-      sql(s"CREATE OR REPLACE VIEW base_tables.${d._1} AS " +
-        filtered(s"experiment = 'ndt' AND datatype = '${d._2}'"))
+      yield s"base_tables.${d._1}" ->
+        filtered(s"experiment = 'ndt' AND datatype = '${d._2}'")
     // global sidestream: web100 across every experiment
-    sql("CREATE OR REPLACE VIEW base_tables.sidestream AS " +
-      filtered("datatype = 'web100'"))
+    val sidestream = "base_tables.sidestream" -> filtered("datatype = 'web100'")
     // per-experiment raw datasets (the new parser's outputs)
     val rawSets: Seq[(String, String, Seq[String])] = Seq(
       ("raw_ndt", "ndt", Seq("ndt5", "ndt7", "tcpinfo", "annotation2",
@@ -188,20 +201,16 @@ object ReferenceViews {
         "trace1", "traceatlas1")),
       ("raw_utilization", "ndt", Seq("switch")),
       ("raw_cloudflare", "ndt", Seq("speedtest_speed1")))
-    for ((db, exp, dts) <- rawSets) {
-      sql(s"CREATE DATABASE IF NOT EXISTS $db")
-      for (dt <- dts)
-        sql(s"CREATE OR REPLACE VIEW $db.$dt AS " +
-          filtered(s"experiment = '$exp' AND datatype = '$dt'"))
-    }
+    val raw = for ((db, exp, dts) <- rawSets; dt <- dts)
+      yield s"$db.$dt" -> filtered(s"experiment = '$exp' AND datatype = '$dt'")
     // the autoload (dynamic-fleet) tables the autojoin views union —
     // tagged `archiver`, the column ndt7_union strips (ndt7_union.sql:5)
-    sql("CREATE DATABASE IF NOT EXISTS autoload_v2_ndt")
-    for (dt <- Seq("ndt7", "scamper2"))
-      sql(s"CREATE OR REPLACE VIEW autoload_v2_ndt.$dt AS " +
-        s"SELECT a.*, 'autojoin' AS archiver FROM " +
-        s"$Project.base_tables.archive a WHERE experiment = 'ndt' " +
-        s"AND datatype = '$dt'")
+    val autoload = for (dt <- Seq("ndt7", "scamper2"))
+      yield s"autoload_v2_ndt.$dt" ->
+        (s"SELECT a.*, 'autojoin' AS archiver FROM " +
+          s"$Project.base_tables.archive a WHERE experiment = 'ndt' " +
+          s"AND datatype = '$dt'")
+    (bottom :+ sidestream) ++ raw ++ autoload
   }
 
   // ---- manifest body builders -------------------------------------------
@@ -458,16 +467,19 @@ object ReferenceViews {
     // statistics — :145-157
     statDims.map { case (name, dims) => v("statistics", name, stats(dims)) }
 
-  // deploy memo: the manifest is ~90 DDL statements (parse + analyze
-  // per view) — a real catalog deploys once, not once per query. The
+  // deploy memo: a deploy creates 117 views (`archive`, the raw layer
+  // and the 79-view manifest), each body parsed and analysed — a real
+  // catalog deploys once, not once per query. The
   // memo records the sfDir each session is CURRENTLY bound to (the
   // catalog has exactly one base-table binding per session, so a SET
   // of seen dirs would go stale the moment a session returned to an
   // earlier dir), and it is written only AFTER a successful deploy —
   // a mid-deploy failure leaves the memo empty so the next call
   // retries instead of serving names for half-deployed views.
-  // guarded by the deploy() lock — deploy is fully serialized, so a
-  // concurrent structure would only misstate the concurrency contract
+  // guarded by the deploy() lock — whole deploys are serialized (only
+  // the CREATEs inside one deploy run concurrently, and they never
+  // touch the memo), so a concurrent structure would only misstate the
+  // concurrency contract
   // weak-keyed by the session itself (VERDICT r12 #4): an
   // identityHashCode-keyed strong map never evicts entries for dead
   // sessions — harmless under the one-session-per-JVM driver contract,
@@ -482,10 +494,14 @@ object ReferenceViews {
 
   /** Deploy the raw layer + the full manifest (script order, verified
     * dependency-valid, ACL-synced). Returns the qualified names.
-    * Idempotent and memoized per session while the bound sfDir is
-    * unchanged; pass `force = true` to redeploy regardless (e.g. for
-    * a fresh ACL sync). Serialized: concurrent callers never observe
-    * a half-deployed manifest. */
+    * Within a deploy the views are created one dependency level at a
+    * time, the views of a level concurrently, so create-before-use
+    * holds per level; the ACL sync then runs sequentially in manifest
+    * order ([[ViewRegistry.deployQualified]]). Whole deploys are
+    * serialized by this object's lock: concurrent callers never observe
+    * a half-deployed manifest. Idempotent and memoized per session
+    * while the bound sfDir is unchanged; pass `force = true` to
+    * redeploy regardless (e.g. for a fresh ACL sync). */
   def deploy(spark: SparkSession, sfDir: String,
       acl: AclRegistry = new AclRegistry,
       force: Boolean = false, takeOver: Boolean = false): Seq[String] =

@@ -204,28 +204,22 @@ object StandardViews {
   def deploy(spark: SparkSession, sfDir: String): Seq[String] = {
     ReferenceViews.deploy(spark, sfDir)
     createNamedViews(spark)
-    def sql(s: String): Unit = { spark.sql(s); () }
     (Seq(LegacyViews.LegacyDs, IntermediateDs, PublicDs) ++ Aliases)
-      .foreach(ds => sql(s"CREATE DATABASE IF NOT EXISTS $ds"))
+      .foreach(ds => spark.sql(s"CREATE DATABASE IF NOT EXISTS $ds"))
     LegacyViews.ensureBottom(spark)
+    // the lineage is created in make_views.sh order, one view per level
     val stacked = lineage.map { case (ds, name, body) =>
-      val qn = s"$ds.$name"
-      sql(s"CREATE OR REPLACE VIEW $qn AS " +
-        StandardSql.translate(body, vars = vars(ds)))
-      qn
+      s"$ds.$name" -> StandardSql.translate(body, vars = vars(ds))
     }
     // the minor-version public views + the rc/alias redirects — all
     // inline `SELECT * FROM INTERMEDIATE.x` bodies (make_views.sh's
-    // quoted-literal create_view calls)
+    // quoted-literal create_view calls), one level over the lineage
     val links = for (ds <- PublicDs +: Aliases; name <- publicLinks)
-      yield {
-        val qn = s"$ds.$name"
-        sql(s"CREATE OR REPLACE VIEW $qn AS " + StandardSql.translate(
-          s"""#standardSQL
-             |SELECT * FROM `$${INTERMEDIATE}.$name`""".stripMargin,
-          vars = vars(ds)))
-        qn
-      }
-    stacked ++ links
+      yield s"$ds.$name" -> StandardSql.translate(
+        s"""#standardSQL
+           |SELECT * FROM `$${INTERMEDIATE}.$name`""".stripMargin,
+        vars = vars(ds))
+    ViewRegistry.createLevels(spark, stacked.map(Seq(_)) :+ links)
+    (stacked ++ links).map(_._1)
   }
 }

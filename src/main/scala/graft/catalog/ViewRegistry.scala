@@ -1,6 +1,10 @@
 package graft.catalog
 
+import java.util.concurrent.{Callable, ConcurrentLinkedQueue,
+  ExecutionException, Executors}
+
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
@@ -151,6 +155,74 @@ class ViewRegistry(spark: SparkSession) {
             .mkString(", ") + "]").trim)
     }
 
+  /** [[deployAllWithAccess]] for DATASET-QUALIFIED persistent views —
+    * the named-manifest path ([[ReferenceViews]]): each view is created
+    * as `<dataset>.<name>` in the session catalog (reference view names
+    * like `ndt_raw.annotation2` and `msak_raw.annotation2` share bare
+    * names across datasets, so temp views can't carry the surface).
+    * The order is not re-derived: the reference's deploy script order
+    * is the contract, and this method VERIFIES, over the whole manifest
+    * and before any DDL, that it is dependency-valid (every in-set
+    * reference comes earlier — BigQuery's create-time validation
+    * invariant) instead of topo-sorting, failing fast on a violation.
+    *
+    * Each body is parsed once. The views are then created one
+    * dependency level at a time through [[ViewRegistry.createLevels]]
+    * (a view's level is 1 + the highest level among its in-set
+    * dependencies), the views of a level concurrently, so
+    * create-before-use holds per level: every view a body references
+    * exists before its CREATE is issued. Each dataset gets one
+    * `CREATE DATABASE IF NOT EXISTS`. The ACL sync of
+    * [[deployAllWithAccess]] runs after every view exists,
+    * sequentially on the calling thread in manifest order
+    * ([[AclRegistry]] is not thread-safe), so the grants and their
+    * order are those of a view-by-view deploy. A failed CREATE leaves
+    * the ACL registry untouched.
+    */
+  def deployQualified(views: Seq[ViewDef], acl: AclRegistry,
+      vars: Map[String, String] = Map.empty, user: String = "")
+      : Seq[String] = {
+    val planned = levelled(views, vars)
+    val byQ = views.map(v => v.qualifiedName.toLowerCase -> v).toMap
+    views.map(_.dataset).distinct
+      .foreach(ds => spark.sql(s"CREATE DATABASE IF NOT EXISTS $ds"))
+    ViewRegistry.createLevels(spark, planned.groupBy(_.level).toSeq
+      .sortBy(_._1).map(_._2.map(p => p.view.qualifiedName -> p.body)))
+    planned.foreach { p =>
+      acl.syncDataset(p.view.dataset, user, p.view.access)
+      p.deps.foreach { dep =>
+        val target = byQ.get(dep).map(_.qualifiedName).getOrElse(dep)
+        acl.syncDataset(acl.datasetOf(target))
+        acl.syncViewAccess(p.view.qualifiedName, target)
+      }
+    }
+    views.map(_.qualifiedName)
+  }
+
+  /** The views of [[deployQualified]] in the given order, each with its
+    * rendered body, the names it references (parsed once, catalog
+    * prefix stripped) and its dependency level: 1 + the highest level
+    * among its in-set dependencies. Fails on an in-set reference to a
+    * view that comes later (or to itself), before any DDL runs. */
+  private[graft] def levelled(views: Seq[ViewDef],
+      vars: Map[String, String]): Seq[ViewRegistry.Levelled] = {
+    val catalog = spark.sessionState.catalogManager.currentCatalog.name
+    val inSetNames = views.map(_.qualifiedName.toLowerCase).toSet
+    val level = mutable.Map[String, Int]()
+    views.map { v =>
+      val body = render(v.sqlTemplate, vars)
+      val deps = dependencies(body).map(_.stripPrefix(s"$catalog."))
+      val inSet = deps & inSetNames
+      val early = inSet -- level.keySet
+      require(early.isEmpty, s"${v.qualifiedName} deploys before its " +
+        s"dependencies: ${early.mkString(", ")} (order violates the " +
+        "create-before-use invariant)")
+      val l = 1 + inSet.iterator.map(level).maxOption.getOrElse(0)
+      level(v.qualifiedName.toLowerCase) = l
+      ViewRegistry.Levelled(v, body, deps, l)
+    }
+  }
+
   /** [[deployAll]] plus the reference's dataset-access sync
     * (main.go:132-223): per deployed view, its dataset is synced
     * (defaults + declared entries + deploying-user WRITER), and every
@@ -159,45 +231,6 @@ class ViewRegistry(spark: SparkSession) {
     * read tables its callers can't. Pure metadata (grants land in
     * `acl`); Spark enforces nothing.
     */
-  /** [[deployAllWithAccess]] for DATASET-QUALIFIED persistent views —
-    * the named-manifest path ([[ReferenceViews]]): each view is created
-    * as `<dataset>.<name>` in the session catalog (reference view names
-    * like `ndt_raw.annotation2` and `msak_raw.annotation2` share bare
-    * names across datasets, so temp views can't carry the surface), in
-    * the GIVEN order. The order is not re-derived: the reference's
-    * deploy script order is the contract, and this method VERIFIES it
-    * is dependency-valid (every in-set reference already deployed —
-    * BigQuery's create-time validation invariant) instead of
-    * topo-sorting, failing fast on a violation. Same per-view ACL sync
-    * as [[deployAllWithAccess]].
-    */
-  def deployQualified(views: Seq[ViewDef], acl: AclRegistry,
-      vars: Map[String, String] = Map.empty, user: String = "")
-      : Seq[String] = {
-    val catalog = spark.sessionState.catalogManager.currentCatalog.name
-    def norm(dep: String): String = dep.stripPrefix(s"$catalog.")
-    val byQ = views.map(v => v.qualifiedName.toLowerCase -> v).toMap
-    val deployed = mutable.Set[String]()
-    views.foreach { v =>
-      val body = render(v.sqlTemplate, vars)
-      val inSet = dependencies(body).map(norm) & byQ.keySet
-      val early = inSet -- deployed
-      require(early.isEmpty, s"${v.qualifiedName} deploys before its " +
-        s"dependencies: ${early.mkString(", ")} (order violates the " +
-        "create-before-use invariant)")
-      spark.sql(s"CREATE DATABASE IF NOT EXISTS ${v.dataset}")
-      spark.sql(s"CREATE OR REPLACE VIEW ${v.qualifiedName} AS $body")
-      deployed += v.qualifiedName.toLowerCase
-      acl.syncDataset(v.dataset, user, v.access)
-      dependencies(body).map(norm).foreach { dep =>
-        val target = byQ.get(dep).map(_.qualifiedName).getOrElse(dep)
-        acl.syncDataset(acl.datasetOf(target))
-        acl.syncViewAccess(v.qualifiedName, target)
-      }
-    }
-    views.map(_.qualifiedName)
-  }
-
   def deployAllWithAccess(views: Seq[ViewDef], acl: AclRegistry,
       vars: Map[String, String] = Map.empty, user: String = "")
       : Seq[String] = {
@@ -218,5 +251,63 @@ class ViewRegistry(spark: SparkSession) {
       }
     }
     ordered.map(_.name)
+  }
+}
+
+object ViewRegistry {
+
+  /** A manifest view ready to create: see [[ViewRegistry.levelled]]. */
+  private[graft] final case class Levelled(view: ViewDef, body: String,
+      deps: Set[String], level: Int)
+
+  /** Name prefix of the threads [[createLevels]] creates views on. */
+  private[graft] val DeployThreadName = "graft-view-deploy"
+
+  /** Create persistent views, given as (qualified name, body), one
+    * level at a time: the views of a level are created concurrently on
+    * a driver-local pool sized from the driver's cores, and a level
+    * starts only after every CREATE of the one before it has finished.
+    * The caller orders the levels so that a body references views of
+    * earlier levels only, and creates the datasets beforehand.
+    *
+    * If a CREATE fails, the other CREATEs of its level are still waited
+    * for; the first failure in level order is then rethrown, the others
+    * attached as suppressed, and no later level is started. The pool's
+    * threads have all exited when this returns or throws.
+    */
+  def createLevels(spark: SparkSession,
+      levels: Seq[Seq[(String, String)]]): Unit = {
+    val widest = levels.map(_.size).maxOption.getOrElse(0)
+    if (widest == 0) return
+    val threads = new ConcurrentLinkedQueue[Thread]()
+    val pool = Executors.newFixedThreadPool(
+      math.min(widest, Runtime.getRuntime.availableProcessors),
+      (r: Runnable) => {
+        val t = new Thread(r, s"$DeployThreadName-${threads.size}")
+        t.setDaemon(true)
+        threads.add(t)
+        t
+      })
+    try levels.foreach { level =>
+      val tasks = level.map { case (name, body) =>
+        new Callable[Unit] {
+          def call(): Unit =
+            spark.sql(s"CREATE OR REPLACE VIEW $name AS $body")
+        }
+      }
+      val errors = pool.invokeAll(tasks.asJava).asScala.flatMap { f =>
+        try { f.get(); None }
+        catch {
+          case e: ExecutionException => Some(e.getCause)
+        }
+      }
+      errors.headOption.foreach { first =>
+        errors.tail.foreach(first.addSuppressed)
+        throw first
+      }
+    } finally {
+      pool.shutdownNow()
+      threads.forEach(_.join())
+    }
   }
 }

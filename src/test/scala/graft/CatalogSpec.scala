@@ -237,4 +237,145 @@ class CatalogSpec extends SparkTestBase {
         "(SELECT id AS a FROM lsq_t1), (SELECT id AS a FROM lsq_t2)")
     assert(spark.sql(preDq).count() == 8, preDq)
   }
+
+  test("level-parallel reference deploy: 5 levels of 36/14/10/6/13 views; " +
+    "every view's stored text, schema, query columns and properties and " +
+    "every dataset's ACL equal a sequential manifest-order deploy, over " +
+    "repeated forced deploys; every name yields rows; cross-dataset " +
+    "grants recorded") {
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    import graft.catalog.{AccessEntry, AclRegistry, ReferenceViews,
+      ViewRegistry}
+    val dir = "/root/testdata/sf0.001"
+    val manifest = ReferenceViews.manifest
+    val levels = new ViewRegistry(spark)
+      .levelled(manifest, ReferenceViews.vars).groupBy(_.level)
+      .toSeq.sortBy(_._1).map(_._2.size)
+    assert(levels == Seq(36, 14, 10, 6, 13), levels)
+    val names = ReferenceViews.rawLayer.map(_._1) ++
+      manifest.map(_.qualifiedName)
+    def snapshot(s: SparkSession) = names.map { n =>
+      val Array(db, t) = n.split('.')
+      val m = s.sessionState.catalog
+        .getTableMetadata(TableIdentifier(t, Some(db)))
+      n -> (m.viewText, m.schema, m.viewQueryColumnNames, m.properties)
+    }.toMap
+    def acls(acl: AclRegistry) = acl.datasets.map(d => d -> acl.accessOf(d))
+    def diff[A](got: Map[String, A], want: Map[String, A]): Seq[String] =
+      names.filter(n => got(n) != want(n))
+
+    // the level-parallel path, in a fresh session: the body of a forced
+    // ReferenceViews.deploy without its memo, so no entry is left for
+    // the weak-keyed memo spec to count
+    val par = spark.newSession()
+    def deploy(acl: AclRegistry): Seq[String] = {
+      ReferenceViews.registerBase(par, dir)
+      new ViewRegistry(par).deployQualified(manifest, acl, ReferenceViews.vars)
+    }
+    val parAcl = new AclRegistry
+    val deployed = deploy(parAcl)
+    val parSnap = snapshot(par)
+
+    // a test-local sequential deploy in a second fresh session: the raw
+    // layer and then the manifest, one CREATE after another in manifest
+    // order, each view's ACL sync right after its CREATE
+    val seq = spark.newSession()
+    ReferenceViews.registerBase(seq, dir)
+    ReferenceViews.rawLayer.foreach { case (n, body) =>
+      seq.sql(s"CREATE OR REPLACE VIEW $n AS $body") }
+    val seqAcl = new AclRegistry
+    val reg = new ViewRegistry(seq)
+    val byQ = manifest.map(v => v.qualifiedName.toLowerCase -> v).toMap
+    manifest.foreach { v =>
+      val body = reg.render(v.sqlTemplate, ReferenceViews.vars)
+      seq.sql(s"CREATE DATABASE IF NOT EXISTS ${v.dataset}")
+      seq.sql(s"CREATE OR REPLACE VIEW ${v.qualifiedName} AS $body")
+      seqAcl.syncDataset(v.dataset, "", v.access)
+      reg.dependencies(body).map(_.stripPrefix(s"${ReferenceViews.Project}."))
+        .foreach { dep =>
+          val target = byQ.get(dep).map(_.qualifiedName).getOrElse(dep)
+          seqAcl.syncDataset(seqAcl.datasetOf(target))
+          seqAcl.syncViewAccess(v.qualifiedName, target)
+        }
+    }
+    val seqSnap = snapshot(seq)
+    assert(diff(parSnap, seqSnap).isEmpty,
+      s"level-parallel != sequential: ${diff(parSnap, seqSnap)}")
+    assert(acls(parAcl) == acls(seqAcl))
+
+    // repeated forced deploys in one session land the same catalog
+    for (i <- 1 to 5) {
+      val acl = new AclRegistry
+      deploy(acl)
+      val d = diff(snapshot(par), seqSnap)
+      assert(d.isEmpty, s"forced deploy $i differs: $d")
+      assert(acls(acl) == acls(seqAcl), s"forced deploy $i: ACLs differ")
+    }
+
+    assert(deployed == manifest.map(_.qualifiedName))
+    val empty = deployed.filter(n => par.table(n).head(1).isEmpty)
+    assert(empty.isEmpty, s"deployed but empty: ${empty.mkString(", ")}")
+    assert(parAcl.accessOf("ndt_intermediate")
+      .contains(AccessEntry.view("ndt.unified_downloads")))
+    assert(parAcl.accessOf("ndt")
+      .contains(AccessEntry.view("statistics.v0_countries")))
+    assert(parAcl.accessOf("ndt")
+      .contains(AccessEntry.view("ndt_intermediate.extended_ndt7_downloads")))
+    // hand the base-table binding back to the shared session
+    ReferenceViews.registerBase(spark, dir)
+  }
+
+  test("level-parallel deploy failure: a level-2 analysis error is " +
+    "rethrown after its whole level finished, with the level's other " +
+    "failure suppressed; no level-3 view, no ACL grant, no pool thread " +
+    "left; an order violation fails before any DDL") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.AnalysisException
+    import graft.catalog.{AclRegistry, ViewDef, ViewRegistry}
+    val reg = new ViewRegistry(spark)
+    def view(name: String, sql: String) = ViewDef(name, sql, dataset = "lvl_t")
+    def exists(name: String) = spark.catalog.tableExists(s"lvl_t.$name")
+    spark.sql("DROP DATABASE IF EXISTS lvl_t CASCADE")
+    val level1 = Seq(view("a", "SELECT id FROM range(10)"),
+      view("b", "SELECT id AS k FROM range(5)"))
+    // the first view of level 2 fails at once; sixteen more are queued
+    // behind it on a pool no wider than the driver's cores
+    val ok2 = (1 to 16).map(i => view(s"c$i",
+      s"SELECT id * $i AS x FROM spark_catalog.lvl_t.a"))
+    val level2 = view("bad", "SELECT no_such_col FROM spark_catalog.lvl_t.b") +:
+      ok2 :+ view("bad2", "SELECT no_such_col2 FROM spark_catalog.lvl_t.a")
+    val level3 = Seq(view("top", "SELECT * FROM spark_catalog.lvl_t.c1"))
+    val views = level1 ++ level2 ++ level3
+    assert(reg.levelled(views, Map.empty).map(_.level) ==
+      Seq(1, 1) ++ Seq.fill(level2.size)(2) :+ 3)
+    val acl = new AclRegistry
+    val ex = intercept[AnalysisException](reg.deployQualified(views, acl))
+    // observed right at the throw: every other level-2 CREATE had ended
+    val created = views.map(_.name).filter(exists)
+    assert(created == Seq("a", "b") ++ ok2.map(_.name), created)
+    assert(ex.getMessage.contains("no_such_col"), ex.getMessage)
+    assert(ex.getSuppressed.map(_.getMessage).toSeq.exists(
+      _.contains("no_such_col2")))
+    // analysed on the deploy pool, not the calling thread
+    assert(ex.getStackTrace.exists(
+      _.getClassName.startsWith("java.util.concurrent.ThreadPoolExecutor")))
+    assert(acl.datasets.isEmpty)
+    val alive = Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName.startsWith(ViewRegistry.DeployThreadName))
+    assert(alive.isEmpty, alive.map(_.getName))
+
+    // manifest order violating create-before-use: today's message, and
+    // nothing created (not even the dataset)
+    spark.sql("DROP DATABASE IF EXISTS lvl_t CASCADE")
+    val misordered = Seq(view("first", "SELECT 1 AS x"),
+      view("early", "SELECT * FROM spark_catalog.lvl_t.late"),
+      view("late", "SELECT 1 AS y"))
+    val order = intercept[IllegalArgumentException](
+      reg.deployQualified(misordered, new AclRegistry))
+    assert(order.getMessage.contains("lvl_t.early deploys before its " +
+      "dependencies: lvl_t.late (order violates the create-before-use " +
+      "invariant)"), order.getMessage)
+    assert(!spark.catalog.databaseExists("lvl_t"))
+  }
 }

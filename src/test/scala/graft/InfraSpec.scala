@@ -3518,6 +3518,21 @@ class InfraSpec extends SparkTestBase {
     assert(bad.isEmpty, bad.mkString("fence through graft.plans.Fence:\n", "\n", ""))
   }
 
+  test("view creation: src/main/scala/graft/catalog issues CREATE OR " +
+    "REPLACE VIEW only in ViewRegistry.createLevels and the sequential " +
+    "archive step of ReferenceViews.registerBase") {
+    // one creator, so the level-parallel deploy's contract (waits per
+    // level, failure handling, pool shutdown) covers every catalog view
+    val bad = for {
+      (f, body) <- mainSources if f.startsWith("catalog/")
+      ddl <- """(?i)CREATE\s+OR\s+REPLACE\s+VIEW\s+\S+""".r.findAllIn(body)
+    } yield s"$f: $ddl"
+    assert(bad.sorted == Seq(
+      "catalog/ReferenceViews.scala: CREATE OR REPLACE VIEW base_tables.archive",
+      "catalog/ViewRegistry.scala: CREATE OR REPLACE VIEW $name"),
+      bad.mkString("\n"))
+  }
+
   test("Fence.bounded: a streaming frame passes through untouched; a " +
     "batch frame comes back checkpointed with the same rows") {
     import graft.plans.Fence
