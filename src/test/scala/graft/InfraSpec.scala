@@ -1707,12 +1707,15 @@ class InfraSpec extends SparkTestBase {
   test("deploy memo is weak-keyed: a dead session's entry is " +
     "collectable (no session leak in a long-lived multi-session driver)") {
     import graft.catalog.ReferenceViews
-    val before = ReferenceViews.memoSize
     var s2 = spark.newSession()
     // same sfDir as the sibling deploy test: the catalog objects are
     // shared (single-metastore contract), so re-binding is a no-op
     ReferenceViews.deploy(s2, "/root/testdata/sf0.001")
-    assert(ReferenceViews.memoSize == before + 1)
+    // the memo as it stands with this test's own entry in it: other
+    // tests' dropped sessions may be collected in the loop below too,
+    // so only a size below this one is adjudicated
+    val withOwn = ReferenceViews.memoSize
+    assert(withOwn >= 1)
     val ref = new java.lang.ref.WeakReference(s2)
     org.apache.spark.sql.SparkSession.clearActiveSession()
     s2 = null
@@ -1730,7 +1733,7 @@ class InfraSpec extends SparkTestBase {
     if (ref.get != null)
       cancel("JVM did not collect the dropped session within 30s -- " +
         "weak-keying unverifiable on this GC profile")
-    assert(ReferenceViews.memoSize == before,
+    assert(ReferenceViews.memoSize < withOwn,
       "WeakHashMap kept the dead session's memo entry")
   }
 
@@ -3496,6 +3499,39 @@ class InfraSpec extends SparkTestBase {
       (0L to 12L).map((_, 0L)))
   }
 
+  test("connectedComponents driver tier: an over-estimated edge stage " +
+    "is collected as first written, with no post-write compaction") {
+    import org.apache.spark.TestBus
+    import graft.operators.Dedup
+    // the same 12-edge chain, behind a filter the optimizer does not
+    // size down: the estimate is that of 20M rows, so the cc_sym write
+    // lands on the shuffle-partition cap, where the corpus tier would
+    // compact it to 1 bucket
+    val chain = spark.range(0, 20000000L).where(col("id") < 12)
+      .toDF("a").select(col("a"), (col("a") + 1).as("b"))
+    assert(chain.queryExecution.optimizedPlan.stats.sizeInBytes >
+      BigInt(4L * 32 * 1024 * 1024))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    TestBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(counter)
+    val r = try Dedup.connectedComponents(chain, maxIter = 20)
+    finally {
+      TestBus.drain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(counter)
+    }
+    // the cc_sym write and the collect, as for the small estimate; a
+    // compaction would add its own shuffle and write jobs
+    assert(jobs.get == 3, s"driver tier ran ${jobs.get} jobs")
+    assert(r.collect().map(x => (x.getLong(0), x.getLong(1))).sorted.toSeq ==
+      (0L to 12L).map((_, 0L)))
+  }
+
   /** (path under src/main/scala/graft, body) for every main source. */
   private def mainSources: Seq[(String, String)] = {
     import scala.jdk.CollectionConverters._
@@ -3530,6 +3566,24 @@ class InfraSpec extends SparkTestBase {
     assert(bad.sorted == Seq(
       "catalog/ReferenceViews.scala: CREATE OR REPLACE VIEW base_tables.archive",
       "catalog/ViewRegistry.scala: CREATE OR REPLACE VIEW $name"),
+      bad.mkString("\n"))
+  }
+
+  test("stream start: src/main opens a writeStream chain and sets a " +
+    "checkpoint location only in Ingest.startStream") {
+    // one start path, so no stream bypasses its checkpoint-manager
+    // choice (SchemeCheckpointFileManager)
+    val site = """\.writeStream\b|"checkpointLocation"""".r
+    val bad = for {
+      (f, body) <- mainSources
+      m <- site.findAllMatchIn(body)
+      enclosing = """\bdef\s+(\w+)""".r
+        .findAllMatchIn(body.substring(0, m.start)).toSeq.lastOption
+        .map(_.group(1)).getOrElse("")
+    } yield s"$f: ${m.matched} in $enclosing"
+    assert(bad.sorted == Seq(
+      "streaming/Ingest.scala: \"checkpointLocation\" in startStream",
+      "streaming/Ingest.scala: .writeStream in startStream"),
       bad.mkString("\n"))
   }
 
