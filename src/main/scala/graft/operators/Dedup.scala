@@ -1186,7 +1186,7 @@ object Dedup {
     val sym = Fence.corpusBucketed(
       if (edgesSymmetric) base
       else base.unionAll(base.select(col("b").as("a"), col("a").as("b"))),
-      "cc_sym", "b", collectable = true)
+      "cc_sym", "b")
     if (Fence.driverBounded(sym)) {
       // DRIVER tier: ONE job brings the stage back as primitive columns
       // (per partition: its a ids and its b ids), never as boxed Rows

@@ -29,13 +29,11 @@ import org.apache.spark.sql.DataFrame
   *
   * When a frame's tier is only known once it is written, the same rule
   * is asked of the stage: [[driverBounded]] answers whether a staged
-  * frame is small enough to collect (a fixed 10 MB of parquet).
-  * `Dedup.connectedComponents` stages its symmetric edge list with
-  * [[corpusBucketed]] and then runs union-find in the driver when the
-  * stage is driver-bounded, HashMin rounds over the stage when it is
-  * not. It stages with `collectable = true`, so the bucketed writer
-  * asks the same rule before its post-write compaction and only a
-  * corpus-tier `cc_sym` is compacted.
+  * frame is small enough to collect (a fixed 10 MB of parquet). Its
+  * one caller is `Dedup.connectedComponents`, which stages its
+  * symmetric edge list with [[corpusBucketed]] and then runs
+  * union-find in the driver when the stage is driver-bounded, HashMin
+  * rounds over the stage when it is not.
   */
 object Fence {
 
@@ -48,14 +46,10 @@ object Fence {
     * derives the count from the optimizer's size estimate (see
     * [[Stage.materializeBucketed]]); pass an explicit count when a
     * loop's exchange-free plan shape requires the stage to match the
-    * session's shuffle partitioning exactly (PageRank). Pass
-    * `collectable = true` when the consumer collects a
-    * [[driverBounded]] stage instead of probing it: such a stage is
-    * then not compacted after its write. */
+    * session's shuffle partitioning exactly (PageRank). */
   def corpusBucketed(df: DataFrame, name: String,
-      bucketCol: String, buckets: Int = 0,
-      collectable: Boolean = false): DataFrame =
-    Stage.materializeBucketed(df, name, bucketCol, buckets, collectable)
+      bucketCol: String, buckets: Int = 0): DataFrame =
+    Stage.materializeBucketed(df, name, bucketCol, buckets)
 
   /** Eager executor-local fence for a DRIVER-BOUNDED partial. A
     * streaming frame cannot be checkpointed and passes through

@@ -265,8 +265,7 @@ object Stage {
   }
 
   def materializeBucketed(df: DataFrame, name: String,
-      bucketCol: String, buckets: Int = 0,
-      collectable: Boolean = false): DataFrame = {
+      bucketCol: String, buckets: Int = 0): DataFrame = {
     val spark = df.sparkSession
     val nb = if (buckets > 0) buckets else adaptiveBuckets(df)
     val unique = s"${name}_${seq.incrementAndGet()}"
@@ -289,13 +288,8 @@ object Stage {
     // iterative round downstream runs 1-task stages instead of
     // cap-task micro-stages. A big stage (the 100 TB case) skips this
     // entirely: one filesystem stat is the only added cost, and the
-    // original single write stands. So does a `collectable` stage that
-    // is DRIVER-BOUNDED (Fence.driverBounded): its consumer collects it
-    // whole (connectedComponents' driver tier), so the bucket count
-    // never reaches a round and the rewrite would be two jobs for
-    // nothing.
-    if (buckets == 0 && nb > 1 &&
-        !(collectable && Fence.driverBounded(back))) {
+    // original single write stands.
+    if (buckets == 0 && nb > 1) {
       val target = bucketTargetBytes(spark)
       val actual = pathBytes(spark, path)
       if (target > 0 && actual >= 0 && actual < 8 * target) {

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery,
   Trigger}
@@ -32,14 +31,19 @@ object Ingest {
     * manager choice below (an InfraSpec guard fails on any other
     * `writeStream` in `src/main`).
     *
-    * The session's checkpoint manager becomes
-    * [[SchemeCheckpointFileManager]]: checkpoints on the `file` scheme
-    * are written through the Hadoop FileSystem API, any other scheme
-    * keeps Spark's default `FileContext` manager (HDFS behaviour is
-    * unchanged). The setting is installed on the session before
-    * `start()` and left there: the source log is created later, on the
+    * Before `start()`, [[SchemeCheckpointFileManager.install]] makes
+    * [[SchemeCheckpointFileManager]] the session's checkpoint manager,
+    * unless the session already names a manager of its own, which is
+    * kept. Checkpoints on the `file` scheme are then written through
+    * the Hadoop FileSystem API; any other scheme keeps Spark's default
+    * `FileContext` manager, so HDFS behaviour is unchanged. The setting
+    * stays on the session: the source log is created later, on the
     * stream thread, in a clone of the session, so setting it only
-    * around `start()` would race with that clone.
+    * around `start()` would race with that clone. A later stream of
+    * the same session with a `file` checkpoint, started here or not,
+    * is therefore written through the FileSystem API as well: Spark's
+    * own `FileSystemBasedCheckpointFileManager`, with the same files
+    * and the same write-then-rename protocol.
     *
     * The cause. Spark's default manager promotes each metadata file by
     * `FileContext.rename`; on local disk that runs through `ChecksumFs`
@@ -52,28 +56,18 @@ object Ingest {
     * round (30 append batches, 3 screen batches) counted 1,048
     * `readlink` forks, all from `renameTempFile`; the FileSystem-based
     * manager renames with `File.renameTo`, and the same round forked
-    * none. On a 4-vCPU host, 10 alternating `daily_ingest` pairs at
-    * the bench scale measured `query_geomean_s` 0.564 → 0.422 s
-    * (median, −25 %) and `suite_s` 27.0 → 23.4 s, with `spark_jobs`
-    * unchanged at 67.
+    * none. The timings are in ROADMAP.md.
     */
   private def startStream(df: DataFrame, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow())(
       sink: DataStreamWriter[Row] => DataStreamWriter[Row])
       : StreamingQuery = {
-    df.sparkSession.conf.set(SchemeCheckpointFileManager.ClassKey,
-      checkpointManager.value.getName)
+    SchemeCheckpointFileManager.install(df.sparkSession)
     sink(df.writeStream)
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .start()
   }
-
-  /** The checkpoint manager [[startStream]] installs. Tests swap in
-    * Spark's default for one block (`checkpointManager.withValue(...)`)
-    * to compare the two on the same drops. */
-  private[graft] val checkpointManager = new scala.util.DynamicVariable[
-    Class[_ <: CheckpointFileManager]](classOf[SchemeCheckpointFileManager])
 
   /** File-arrival stream over a directory of parquet drops. */
   def streamTable(spark: SparkSession, dir: String, schema: StructType,

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path, PathFilter}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.checkpointing.{
   CheckpointFileManager, FileSystemBasedCheckpointFileManager}
 
@@ -21,7 +22,9 @@ import org.apache.spark.sql.execution.streaming.checkpointing.{
   *
   * Spark builds the manager by reflection from
   * `spark.sql.streaming.checkpointFileManagerClass` with this
-  * `(Path, Configuration)` constructor; `Ingest.startStream` installs it.
+  * `(Path, Configuration)` constructor; `Ingest.startStream` installs it
+  * ([[SchemeCheckpointFileManager.install]]) only on a session that names
+  * no manager, so the non-`file` branch is Spark's default there.
   */
 class SchemeCheckpointFileManager(path: Path, hadoopConf: Configuration)
     extends CheckpointFileManager {
@@ -57,6 +60,15 @@ object SchemeCheckpointFileManager {
   /** The session setting Spark reads the manager class from. */
   private[streaming] val ClassKey =
     "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** Names this class as `spark`'s checkpoint manager, unless the
+    * session already names one — read as Spark reads it, from the
+    * session's Hadoop configuration, so a `spark.hadoop.` setting
+    * counts too. A manager named there (this class or a deployment's
+    * own, an object-store one say) is kept. */
+  def install(spark: SparkSession): Unit =
+    if (spark.sessionState.newHadoopConf().get(ClassKey) == null)
+      spark.conf.set(ClassKey, classOf[SchemeCheckpointFileManager].getName)
 
   /** True when a checkpoint at `path` is written through the FileSystem
     * API: its scheme — or, for a path without one, the default file

@@ -96,6 +96,27 @@ class CheckpointSpec extends SparkTestBase {
     assert(m.isLocal)
   }
 
+  test("checkpoint manager install: a session that names no manager " +
+    "gets the scheme-chosen one; a session that names its own keeps it") {
+    val fresh = spark.newSession()
+    assert(fresh.conf.getOption(ManagerKey).isEmpty)
+    SchemeCheckpointFileManager.install(fresh)
+    assert(fresh.conf.get(ManagerKey) ==
+      classOf[SchemeCheckpointFileManager].getName)
+    SchemeCheckpointFileManager.install(fresh)
+    assert(fresh.conf.get(ManagerKey) ==
+      classOf[SchemeCheckpointFileManager].getName)
+    // a deployment's own manager, set before any stream starts
+    val own = spark.newSession()
+    own.conf.set(ManagerKey,
+      classOf[FileContextBasedCheckpointFileManager].getName)
+    SchemeCheckpointFileManager.install(own)
+    assert(own.conf.get(ManagerKey) ==
+      classOf[FileContextBasedCheckpointFileManager].getName)
+    // the installed setting is per session
+    assert(spark.newSession().conf.getOption(ManagerKey).isEmpty)
+  }
+
   test("checkpoint manager equivalence: the partitioned append and the " +
     "MinHash screen give the same rows, decisions and index layers under " +
     "Spark's default manager and under the FileSystem-based one") {
@@ -136,9 +157,19 @@ class CheckpointSpec extends SparkTestBase {
       (appended(out), decisions, layers, standing, installed)
     }
 
-    val viaDefault = Ingest.checkpointManager.withValue(
-      classOf[FileContextBasedCheckpointFileManager])(round())
-    val viaHelper = round()
+    // a session naming Spark's default manager keeps it; with no
+    // manager named, the helper installs the scheme-chosen one
+    val preset = spark.conf.getOption(ManagerKey)
+    val (viaDefault, viaHelper) = try {
+      spark.conf.set(ManagerKey,
+        classOf[FileContextBasedCheckpointFileManager].getName)
+      val d = round()
+      spark.conf.unset(ManagerKey)
+      (d, round())
+    } finally preset match {
+      case Some(c) => spark.conf.set(ManagerKey, c)
+      case None => spark.conf.unset(ManagerKey)
+    }
     assert(viaDefault._5 == classOf[FileContextBasedCheckpointFileManager].getName)
     assert(viaHelper._5 == classOf[SchemeCheckpointFileManager].getName)
     // every sf0.001 row of the 5 days, once

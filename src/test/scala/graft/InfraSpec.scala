@@ -3499,39 +3499,6 @@ class InfraSpec extends SparkTestBase {
       (0L to 12L).map((_, 0L)))
   }
 
-  test("connectedComponents driver tier: an over-estimated edge stage " +
-    "is collected as first written, with no post-write compaction") {
-    import org.apache.spark.TestBus
-    import graft.operators.Dedup
-    // the same 12-edge chain, behind a filter the optimizer does not
-    // size down: the estimate is that of 20M rows, so the cc_sym write
-    // lands on the shuffle-partition cap, where the corpus tier would
-    // compact it to 1 bucket
-    val chain = spark.range(0, 20000000L).where(col("id") < 12)
-      .toDF("a").select(col("a"), (col("a") + 1).as("b"))
-    assert(chain.queryExecution.optimizedPlan.stats.sizeInBytes >
-      BigInt(4L * 32 * 1024 * 1024))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val counter = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    TestBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(counter)
-    val r = try Dedup.connectedComponents(chain, maxIter = 20)
-    finally {
-      TestBus.drain(spark.sparkContext)
-      spark.sparkContext.removeSparkListener(counter)
-    }
-    // the cc_sym write and the collect, as for the small estimate; a
-    // compaction would add its own shuffle and write jobs
-    assert(jobs.get == 3, s"driver tier ran ${jobs.get} jobs")
-    assert(r.collect().map(x => (x.getLong(0), x.getLong(1))).sorted.toSeq ==
-      (0L to 12L).map((_, 0L)))
-  }
-
   /** (path under src/main/scala/graft, body) for every main source. */
   private def mainSources: Seq[(String, String)] = {
     import scala.jdk.CollectionConverters._
