@@ -53,8 +53,6 @@ object Graph {
       srcCol: String, dstCol: String, iterations: Int,
       damping: Double = 0.85): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    val spark = nodes.sparkSession
-    import spark.implicits._
     val round9 = (c: org.apache.spark.sql.Column) =>
       floor(c * 1e9 + 0.5) / 1e9
     // TWO durable fences for the whole loop: the edge table staged
@@ -71,18 +69,9 @@ object Graph {
     // each round's two joins inherit/meet HashPartitioning(node|src)
     // on every side and the round's ONLY exchange is the groupBy(dst)
     // contribution aggregate.
-    // ALL of this loop's bucketed stages pin buckets to the session's
-    // shuffle partitioning: the per-round contrib aggregate lands on
-    // exactly numShufflePartitions, and the rank-update join is
-    // exchange-free ONLY when the bucketed node stage matches it — an
-    // adaptive (size-derived) count here would re-shuffle the rank
-    // table every round to meet the stage (round-19 pin audit). The
-    // knob stays scale-correct because numShufflePartitions IS the
-    // session's scale setting, not a local constant.
-    val prBuckets = spark.sessionState.conf.numShufflePartitions
     val e = Fence.corpusBucketed(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst")),
-      "pr_edges", "src", prBuckets)
+      "pr_edges", "src")
     // deg join shuffle-pinned like the rank join: deg has one row per
     // node WITH out-edges (corpus-sized at 100 TB) and AQE's small-SF
     // estimate would broadcast it; pinned, both sides sit on the
@@ -100,8 +89,7 @@ object Graph {
     // expensive caller-side node derivation now runs once, not
     // iterations+1 times.
     val ids = Fence.corpusBucketed(
-      nodes.select(col(nodeCol).as("node")), "pr_nodes", "node",
-      prBuckets)
+      nodes.select(col(nodeCol).as("node")), "pr_nodes", "node")
     val n = ids.count()
     val teleport = (1.0 - damping) / n.toDouble
     var ranks = ids.withColumn("r", lit(1.0) / n.toDouble)
@@ -120,8 +108,7 @@ object Graph {
       if (i % 8 == 0 && i < iterations) {
         // bucketed on node so the re-fenced rank table re-enters the
         // loop with the partitioning the contrib join expects
-        ranks = Fence.corpusBucketed(ranks, "pr_ranks", "node",
-          prBuckets)
+        ranks = Fence.corpusBucketed(ranks, "pr_ranks", "node")
         // this fence's write consumed the previous one; storage stays
         // bounded by the 2 live rank stages, not iterations/8
         if (prevFence != null) Fence.reclaim(prevFence)

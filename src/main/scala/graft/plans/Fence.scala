@@ -42,14 +42,17 @@ object Fence {
     Stage.materializeUnique(df, name)
 
   /** Durable fence for a corpus-sized frame probed on `bucketCol`
-    * every round by an iterative consumer. `buckets = 0` (default)
-    * derives the count from the optimizer's size estimate (see
-    * [[Stage.materializeBucketed]]); pass an explicit count when a
-    * loop's exchange-free plan shape requires the stage to match the
-    * session's shuffle partitioning exactly (PageRank). */
+    * every round by an iterative consumer
+    * ([[Stage.materializeBucketed]]). The one bucket rule: the stage
+    * always has `spark.sql.shuffle.partitions` buckets, the count every
+    * shuffle of a loop round lands on, so a join of the stage with a
+    * round's re-derived side plans no exchange on the staged side
+    * (PageRank's rank-update join needs exactly this). The count is the
+    * session's own scale setting; no optimizer size estimate, which can
+    * be off in either direction, enters it. */
   def corpusBucketed(df: DataFrame, name: String,
-      bucketCol: String, buckets: Int = 0): DataFrame =
-    Stage.materializeBucketed(df, name, bucketCol, buckets)
+      bucketCol: String): DataFrame =
+    Stage.materializeBucketed(df, name, bucketCol)
 
   /** Eager executor-local fence for a DRIVER-BOUNDED partial. A
     * streaming frame cannot be checkpointed and passes through

@@ -186,30 +186,18 @@ object Stage {
     }
   }
 
-  /** Bytes on disk under a staged path (one filesystem stat, no job);
-    * -1 when the stat fails. */
-  private def pathBytes(spark: SparkSession, path: String): Long =
-    try {
-      val p = new Path(path)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .getContentSummary(p).getLength
-    } catch { case NonFatal(_) => -1L }
-
-  /** Staged parquet bytes behind a frame a materialize returned — the
-    * size rule's input for [[Fence.driverBounded]]; -1 for a frame this
-    * writer did not stage (or a failed stat). */
+  /** Staged parquet bytes behind a frame a materialize returned (one
+    * filesystem stat, no job) — the size rule's input for
+    * [[Fence.driverBounded]]; -1 for a frame this writer did not stage
+    * or a failed stat. */
   private[plans] def stagedBytes(df: DataFrame): Long =
-    stagedPath(df).map(pathBytes(df.sparkSession, _)).getOrElse(-1L)
-
-  /** Per-bucket byte target of an adaptive bucketed stage. */
-  private def bucketTargetBytes(spark: SparkSession): Long =
-    spark.conf.getOption("graft.stage.bucketTargetBytes")
-      .map(_.toLong).getOrElse(32L * 1024 * 1024)
-
-  /** Test/debug hook: the staged path behind a materialized frame
-    * (None if `df` is not a live staged read-back). */
-  private[graft] def stagedPath(df: DataFrame): Option[String] =
-    Option(stagedFrames.get(df)).map(_._1)
+    Option(stagedFrames.get(df)).fold(-1L) { case (path, _) =>
+      try {
+        val p = new Path(path)
+        p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+          .getContentSummary(p).getLength
+      } catch { case NonFatal(_) => -1L }
+    }
 
   /** [[materializeUnique]] for frames an iterative consumer probes on
     * the same key every round (connected-components / PageRank edge
@@ -217,13 +205,13 @@ object Stage {
     * partitioning, so every round's join would re-shuffle the edge
     * list — the one thing the old partitioned localCheckpoint avoided.
     * Bucketing is Spark's durable co-location primitive: the staged
-    * table is written `bucketBy(buckets, bucketCol)` (an external
-    * table — data under the stage root, metadata in the session's
-    * in-memory catalog, both reclaimed with the session), and the
-    * read-back scan reports HashPartitioning(bucketCol, buckets), so
-    * each round shuffles only the (re-derived) rank/label table, never
-    * the staged side. `buckets` defaults to the session's shuffle
-    * parallelism so the probe side lands on the same partition count.
+    * table is written `bucketBy(nb, bucketCol)` (an external table —
+    * data under the stage root, metadata in the session's in-memory
+    * catalog, both reclaimed with the session), and the read-back scan
+    * reports HashPartitioning(bucketCol, nb), so each round shuffles
+    * only the (re-derived) rank/label table, never the staged side.
+    * `nb` is the session's shuffle partitioning; the rule is stated at
+    * [[Fence.corpusBucketed]].
     *
     * The input is repartitioned on `bucketCol` HERE, at the
     * chokepoint: a bucketed write emits one file per bucket PER TASK,
@@ -238,36 +226,10 @@ object Stage {
     * names would let `saveAsTable(overwrite)` repoint the other
     * driver's stage table mid-read (ADVICE r11).
     */
-  /** Bucket count for an adaptive (`buckets = 0`) bucketed stage:
-    * size-derived instead of a flat numShufflePartitions, so a
-    * KB-sized edge table (a 500-node local component graph) stages as
-    * ONE bucket and every downstream propagation round runs 1-task
-    * stages, while a TB-sized table at cluster scale still gets the
-    * full shuffle parallelism (guide §2 — scale-adaptive partitioning,
-    * not a local[32] constant). The size source is the optimizer's
-    * estimate for the input plan, trusted only DOWNWARD: an inflated
-    * join estimate (the common failure mode — Catalyst multiplies
-    * selectivities up) simply hits the numShufflePartitions cap, which
-    * is exactly the pre-round-19 behavior. The per-bucket target is
-    * half the usual 64 MB advisory to absorb parquet-vs-in-memory
-    * expansion when the estimate comes from a scan
-    * (`graft.stage.bucketTargetBytes` overrides).
-    */
-  private def adaptiveBuckets(df: DataFrame): Int = {
-    val spark = df.sparkSession
-    val cap = spark.sessionState.conf.numShufflePartitions
-    val target = bucketTargetBytes(spark)
-    val est =
-      try df.queryExecution.optimizedPlan.stats.sizeInBytes
-      catch { case NonFatal(_) => BigInt(-1) }
-    if (est <= 0 || target <= 0) cap
-    else ((est + target - 1) / target).min(cap).max(1).toInt
-  }
-
   def materializeBucketed(df: DataFrame, name: String,
-      bucketCol: String, buckets: Int = 0): DataFrame = {
+      bucketCol: String): DataFrame = {
     val spark = df.sparkSession
-    val nb = if (buckets > 0) buckets else adaptiveBuckets(df)
+    val nb = spark.sessionState.conf.numShufflePartitions
     val unique = s"${name}_${seq.incrementAndGet()}"
     val path = s"${stageRoot(spark)}/$unique"
     val table = ("graft_stage_" + sessionNs(spark) + "_" + unique)
@@ -279,29 +241,6 @@ object Stage {
       .saveAsTable(table)
     val back = spark.table(table)
     stagedFrames.put(back, (path, Some(table)))
-    // POST-WRITE COMPACT for the adaptive path: when the estimate was
-    // inflated (a pair-generator join plan) the stage landed on the
-    // numShufflePartitions cap, and now the ACTUAL staged bytes are
-    // known for free. If the stage turned out tiny (< 8 targets) and
-    // clearly over-scattered (needed ≤ nb/4), rewrite it at the right
-    // bucket count — a trivial re-read of KBs locally, so every
-    // iterative round downstream runs 1-task stages instead of
-    // cap-task micro-stages. A big stage (the 100 TB case) skips this
-    // entirely: one filesystem stat is the only added cost, and the
-    // original single write stands.
-    if (buckets == 0 && nb > 1) {
-      val target = bucketTargetBytes(spark)
-      val actual = pathBytes(spark, path)
-      if (target > 0 && actual >= 0 && actual < 8 * target) {
-        val needed = math.max(1L, (actual + target - 1) / target).toInt
-        if (needed * 4 <= nb) {
-          val compacted =
-            materializeBucketed(back, s"${name}_c", bucketCol, needed)
-          reclaim(back)
-          return compacted
-        }
-      }
-    }
     back
   }
 }

@@ -3571,7 +3571,6 @@ class InfraSpec extends SparkTestBase {
     "src/main reads is listed here with the reason it stays") {
     val listed = Set(
       graft.plans.Stage.DirKey, // deployment path: a shared filesystem
-      "graft.stage.bucketTargetBytes", // deployment sizing; PlanSpec pins it
       "graft.scan.parallelismFloor", // tests run it off; PlanSpec pins both
       "SPARK_GRAFT_SF_DIR", // Bench input directory
       "SPARK_GRAFT_CPUS", // Bench/Verify local[N] width

@@ -528,59 +528,36 @@ class PlanSpec extends SparkTestBase {
       "cpuFloor must return an exchange-bearing frame untouched")
   }
 
-  test("Stage.materializeBucketed: adaptive bucket count is size-" +
-    "derived (small scan -> 1 bucket), capped at shuffle partitions, " +
-    "and the explicit count still wins") {
+  test("Stage.materializeBucketed: a bucketed stage has the session's " +
+    "shuffle partitions as buckets, whatever its size, and is written " +
+    "once") {
     import graft.plans.Stage
-    val s = spark.newSession()
-    // empty buckets write no file, so count buckets from the catalog's
-    // bucketSpec, not the staged directory
-    def numBuckets(sess: org.apache.spark.sql.SparkSession,
-        frag: String): Int = {
-      val id = sess.sessionState.catalog.listTables("default")
-        .filter(_.table.contains(frag)).maxBy(_.table)
-      sess.sessionState.catalog.getTableMetadata(id)
-        .bucketSpec.get.numBuckets
+    for (parts <- Seq(4, 3)) {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      // a KB-sized scan (an accurate, tiny size estimate) and a
+      // cross-join plan (an inflated estimate over 9 rows)
+      val tiny = graft.Tables.load(s, sf, "region").select(
+        col("r_regionkey").cast("long").as("k"), col("r_name"))
+      val inflated = s.range(0, 100000).toDF("k")
+        .crossJoin(s.range(0, 50).toDF("j"))
+        .filter(col("k") < 3 && col("j") < 3)
+        .select((col("k") * 100 + col("j")).as("k"))
+      for ((in, name) <- Seq(tiny -> s"rule${parts}_tiny",
+          inflated -> s"rule${parts}_infl")) {
+        val staged = Stage.materializeBucketed(in, name, "k")
+        val tables = s.sessionState.catalog.listTables("default")
+          .filter(_.table.contains(name))
+        assert(!tables.exists(_.table.contains(s"${name}_c_")),
+          s"$name was rewritten after the write: $tables")
+        // empty buckets write no file, so read the count from the
+        // catalog's bucketSpec, not the staged directory
+        assert(tables.map(s.sessionState.catalog.getTableMetadata(_)
+          .bucketSpec.map(_.numBuckets)) == Seq(Some(parts)),
+          s"$name: want one stage of $parts buckets: $tables")
+        assert(staged.orderBy("k").collect().toSeq ==
+          in.orderBy("k").collect().toSeq)
+      }
     }
-    // KB-sized scan-shaped input: the optimizer's estimate is accurate
-    // and far below the per-bucket target -> ONE bucket, so iterative
-    // consumers run 1-task rounds instead of numShufflePartitions-task
-    // micro-stages (scale-adaptive partitioning, guide §2)
-    val tiny = graft.Tables.load(s, sf, "region").select(
-      col("r_regionkey").cast("long").as("k"), col("r_name"))
-    val small = Stage.materializeBucketed(tiny, "adapt_small", "k")
-    assert(numBuckets(s, "adapt_small") == 1,
-      s"tiny input should stage as 1 bucket")
-    // a tiny per-bucket target forces the cap: never more buckets than
-    // the session's shuffle parallelism (the pre-adaptive default)
-    val s2 = spark.newSession()
-    s2.conf.set("graft.stage.bucketTargetBytes", "1")
-    Stage.materializeBucketed(
-      graft.Tables.load(s2, sf, "region").select(
-        col("r_regionkey").cast("long").as("k")), "adapt_capped", "k")
-    assert(numBuckets(s2, "adapt_capped") ==
-      s2.sessionState.conf.numShufflePartitions,
-      "estimate above target*cap must clamp to numShufflePartitions")
-    // explicit bucket count bypasses the estimate entirely
-    Stage.materializeBucketed(tiny, "adapt_explicit", "k", buckets = 3)
-    assert(numBuckets(s, "adapt_explicit") == 3,
-      "explicit bucket count must be honored")
-    // content identical through the adaptive path
-    assert(small.orderBy("k").collect().toSeq ==
-      tiny.orderBy("k").collect().toSeq)
-    // post-write compact: an INFLATED estimate (cross-join plan) lands
-    // on the cap, but the actual staged bytes are tiny -> the stage is
-    // rewritten at the derived count (1 bucket) and the over-scattered
-    // original reclaimed
-    import s.implicits._
-    val inflated = s.range(0, 100000).toDF("k")
-      .crossJoin(s.range(0, 50).toDF("j"))
-      .filter(col("k") < 3 && col("j") < 3)
-      .select((col("k") * 100 + col("j")).as("k"))
-    val compacted = Stage.materializeBucketed(inflated, "adapt_infl", "k")
-    assert(numBuckets(s, "adapt_infl_c") == 1,
-      "tiny actual bytes under an inflated estimate must compact to 1")
-    assert(compacted.count() == 9,
-      "compacted stage must carry the original rows")
   }
 }
