@@ -1126,11 +1126,10 @@ object Dedup {
     * A~B and B~C, pair-wise "keep the smaller id" would wrongly keep
     * both A and C).
     *
-    * Two size tiers, the two tiers of [[graft.plans.Fence]]. The
-    * symmetric edge list is staged first (`cc_sym`,
-    * [[graft.plans.Fence.corpusBucketed]]); then
-    * [[graft.plans.Fence.driverBounded]] compares the staged parquet
-    * bytes with its fixed driver bound (10 MB).
+    * Two size tiers, the two tiers of [[graft.plans.Fence]], chosen by
+    * [[graft.plans.Fence.tiered]]: the symmetric edge list is staged
+    * plainly (`cc_sym`) and its staged parquet bytes are compared with
+    * the fixed driver bound (10 MB).
     *
     *  - DRIVER tier (staged bytes within the bound): the staged
     *    edges are collected once, as primitive id arrays, and
@@ -1139,7 +1138,9 @@ object Dedup {
     *    back as a local frame. It always converges fully — every node
     *    gets the minimum id of its whole component, which is what the
     *    recursive-CTE oracles compute — so `maxIter` does not apply.
-    *  - CORPUS tier (anything larger): HashMin label propagation. Every
+    *  - CORPUS tier (anything larger): the stage is re-staged bucketed
+    *    on `b` ([[graft.plans.Fence.corpusBucketed]], the plain stage
+    *    is then reclaimed), and HashMin label propagation runs. Every
     *    node starts as its own label; each round takes the min of its
     *    neighbors' labels; converges to the component-minimum id in
     *    O(component diameter) rounds (fewer with the pointer jump
@@ -1171,37 +1172,39 @@ object Dedup {
   def connectedComponents(edges: DataFrame, maxIter: Int = 20,
       edgesSymmetric: Boolean = false): DataFrame = {
     val spark = edges.sparkSession
-    import spark.implicits._
-    // Materialize the (possibly expensive) edge derivation ONCE — every
-    // propagation round joins against `sym`, and without this the whole
-    // upstream pair pipeline (MinHash etc.) would re-execute per round.
-    // Staged BUCKETED on `b` (the side every round's join probes): the
-    // durable read-back keeps HashPartitioning(b), so each round
-    // shuffles only the label table, never the (larger) edge list —
-    // and an executor loss mid-propagation replays a file scan instead
-    // of killing the job (the localCheckpoint failure mode).
     val base = edges.select(col("a").cast("long").as("a"),
       col("b").cast("long").as("b"))
       .where(col("a").isNotNull && col("b").isNotNull)
-    val sym = Fence.corpusBucketed(
+    // Materialize the (possibly expensive) edge derivation ONCE — every
+    // propagation round joins against the edges, and without a stage
+    // the whole upstream pair pipeline (MinHash etc.) would re-execute
+    // per round
+    Fence.tiered(
       if (edgesSymmetric) base
       else base.unionAll(base.select(col("b").as("a"), col("a").as("b"))),
-      "cc_sym", "b")
-    if (Fence.driverBounded(sym)) {
-      // DRIVER tier: ONE job brings the stage back as primitive columns
-      // (per partition: its a ids and its b ids), never as boxed Rows
-      val parts = sym.rdd.mapPartitions { rows =>
-        val as = Array.newBuilder[Long]
-        val bs = Array.newBuilder[Long]
-        rows.foreach { r => as += r.getLong(0); bs += r.getLong(1) }
-        Iterator((as.result(), bs.result()))
-      }.collect()
-      Fence.reclaim(sym)
-      return spark.createDataFrame(
-        unionFind(parts.flatMap(_._1), parts.flatMap(_._2)),
+      "cc_sym") { sym =>
+      // DRIVER tier: the stage came back as primitive id columns
+      Some(spark.createDataFrame(unionFind(sym.longs(0), sym.longs(1)),
         StructType(Seq(StructField("node", LongType),
-          StructField("component", LongType))))
+          StructField("component", LongType)))))
+    } { staged =>
+      // CORPUS tier: re-staged BUCKETED on `b` (the side every round's
+      // join probes): the durable read-back keeps HashPartitioning(b),
+      // so each round shuffles only the label table, never the (larger)
+      // edge list — and an executor loss mid-propagation replays a file
+      // scan instead of killing the job (the localCheckpoint failure
+      // mode)
+      val sym = Fence.corpusBucketed(staged, "cc_sym", "b")
+      Fence.reclaim(staged)
+      hashMin(sym, maxIter)
     }
+  }
+
+  /** [[connectedComponents]]' corpus tier: HashMin rounds over the
+    * bucketed symmetric edge stage `sym` (a, b). */
+  private def hashMin(sym: DataFrame, maxIter: Int): DataFrame = {
+    val spark = sym.sparkSession
+    import spark.implicits._
     // Round 1 fused into initialization: a node's first propagated label
     // is min(self, neighbors), which is one groupBy over the symmetric
     // edge list — no join. (The classic formulation spends a full

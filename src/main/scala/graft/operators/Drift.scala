@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
+
+import graft.plans.Fence
 
 /** Distribution-drift measurement between two binned count tables —
   * the reusable core of the qB2 drift gate, shaped for the streaming
@@ -12,12 +15,17 @@ import org.apache.spark.sql.functions._
   * Laplace +1 smoothing keeps one-sided bins finite; contributions are
   * exact expressions over integer counts.
   *
-  * The quantile and KS reductions read their bounded (v, cnt)-style
-  * count table several times (bounds, block offsets, the in-block
-  * cumulative leg), so each fences it once with
-  * [[graft.plans.Fence.bounded]]: without it every leg re-evaluates
-  * the count aggregation AND the corpus scan under it (the round-19
-  * qM9 plan audit showed 16 scans of the events table for one query).
+  * The quantile and KS reductions read their (v, cnt)-style count
+  * table several times (bounds, block offsets, the in-block cumulative
+  * leg), so each stages it once through [[graft.plans.Fence.tiered]]:
+  * without a fence every leg re-evaluates the count aggregation AND
+  * the corpus scan under it (the round-19 qM9 plan audit showed 16
+  * scans of the events table for one query). The stage's size picks
+  * the tier: a driver-bounded table is collected once and one rank
+  * walk over its sorted values gives the exact answer in the driver
+  * (no prefix-sum jobs at all); a larger one runs the block prefix-sum
+  * plan over the stage. Both tiers return the same columns, types and
+  * values.
   */
 object Drift {
 
@@ -135,7 +143,16 @@ object Drift {
     require(qs.nonEmpty && qs.forall(q => q > 0 && q <= 1),
       "quantiles must lie in (0, 1]")
     require(nBlocks > 0, "nBlocks must be > 0")
-    val counts = graft.plans.Fence.bounded(counts0)
+    val targets = qs.distinct.sorted
+    Fence.tiered(counts0.select("v", "cnt"), "quantile_counts")(
+      quantilesInDriver(counts0.sparkSession, _, targets, grouped = false))(
+      quantilesPlan(_, targets, nBlocks))
+  }
+
+  /** [[quantilesFromCounts]]' corpus tier over the staged (v, cnt)
+    * table. */
+  private def quantilesPlan(counts: DataFrame, targets: Seq[Double],
+      nBlocks: Int): DataFrame = {
     val bounds = counts.agg(min("v").as("lo"), max("v").as("hi"),
       sum("cnt").as("n"))
     val blocked = counts.crossJoin(broadcast(bounds))
@@ -154,13 +171,7 @@ object Drift {
       .rowsBetween(Window.unboundedPreceding, 0)
     val cum = blocked.join(broadcast(offsets), "block")
       .withColumn("cc", col("off") + sum("cnt").over(wIn))
-    val targets = qs.distinct.sorted
-      .map(q => s"SELECT CAST($q AS DOUBLE) AS q")
-      .mkString(" UNION ALL ")
-    // .distinct() puts an aggregate under the broadcast side so the
-    // plan sweep can see the frame is bounded (|qs| rows).
-    val qdf = counts.sparkSession.sql(targets).distinct()
-    cum.crossJoin(broadcast(qdf))
+    cum.crossJoin(broadcast(targetFrame(counts.sparkSession, targets)))
       // ceil(q·n) in exact integer arithmetic would need rational q;
       // q is a literal double, ceil on the double product matches the
       // oracle's identical expression.
@@ -170,6 +181,14 @@ object Drift {
       .agg(min("v").as("v"))
       .select(col("q"), col("target_rank"), col("v"))
   }
+
+  /** The |qs|-row frame of quantile targets (q). The .distinct() puts an
+    * aggregate under the broadcast side so the plan sweep can see the
+    * frame is bounded. */
+  private def targetFrame(spark: SparkSession, targets: Seq[Double])
+      : DataFrame =
+    spark.sql(targets.map(q => s"SELECT CAST($q AS DOUBLE) AS q")
+      .mkString(" UNION ALL ")).distinct()
 
   /** GROUPED [[quantilesFromCounts]]: exact lower-rank quantiles per
     * group from one (g, v, cnt) table in ONE pass — for callers that
@@ -188,7 +207,16 @@ object Drift {
     require(qs.nonEmpty && qs.forall(q => q > 0 && q <= 1),
       "quantiles must lie in (0, 1]")
     require(nBlocks > 0, "nBlocks must be > 0")
-    val counts = graft.plans.Fence.bounded(counts0)
+    val targets = qs.distinct.sorted
+    Fence.tiered(counts0.select("g", "v", "cnt"), "quantile_counts_by")(
+      quantilesInDriver(counts0.sparkSession, _, targets, grouped = true))(
+      quantilesByPlan(_, targets, nBlocks))
+  }
+
+  /** [[quantilesFromCountsBy]]' corpus tier over the staged (g, v, cnt)
+    * table. */
+  private def quantilesByPlan(counts: DataFrame, targets: Seq[Double],
+      nBlocks: Int): DataFrame = {
     val bounds = counts.groupBy("g").agg(min("v").as("lo"),
       max("v").as("hi"), sum("cnt").as("n"))
     val blocked = counts.join(broadcast(bounds), "g")
@@ -207,17 +235,75 @@ object Drift {
       .rowsBetween(Window.unboundedPreceding, 0)
     val cum = blocked.join(broadcast(offsets), Seq("g", "block"))
       .withColumn("cc", col("off") + sum("cnt").over(wIn))
-    val targets = qs.distinct.sorted
-      .map(q => s"SELECT CAST($q AS DOUBLE) AS q")
-      .mkString(" UNION ALL ")
-    val qdf = counts.sparkSession.sql(targets).distinct()
-    cum.crossJoin(broadcast(qdf))
+    cum.crossJoin(broadcast(targetFrame(counts.sparkSession, targets)))
       .withColumn("target_rank", ceil(col("q") * col("n")).cast("long"))
       .filter(col("cc") >= col("target_rank"))
       .groupBy("g", "q", "target_rank")
       .agg(min("v").as("v"))
       .select(col("g"), col("q"), col("target_rank"), col("v"))
   }
+
+  /** The driver tier of [[quantilesFromCounts]] (`grouped` false:
+    * (v, cnt) columns) and [[quantilesFromCountsBy]] ((g, v, cnt)):
+    * per group, the rank walk finds each target's lower-rank quantile,
+    * the first value in ascending order whose inclusive cumulative count
+    * reaches ceil(q·n), with the ceiling taken on the same double
+    * product as the plan's. That is the plan's min(v) over the rows
+    * whose cumulative count reaches the target: the block number is
+    * monotone in v, so the plan's (block, v) order is v order. Declines
+    * (the corpus tier answers instead) a null anywhere, which the plan's
+    * joins drop and its windows order first, and column types the walk
+    * does not read (a g other than a string: every caller tags groups
+    * with strings). */
+  private def quantilesInDriver(spark: SparkSession, c: Fence.Columns,
+      targets: Seq[Double], grouped: Boolean): Option[DataFrame] = {
+    val at = if (grouped) 1 else 0
+    val types = c.schema.fields.map(_.dataType)
+    if (c.hasNull || types(at) != DoubleType || types(at + 1) != LongType ||
+        grouped && types(0) != StringType) None
+    else {
+      val v = c.doubles(at)
+      val cnt = c.longs(at + 1)
+      val groups: Iterable[(Any, Seq[Int])] =
+        if (!grouped) Seq(((), v.indices))
+        else v.indices.groupBy(c.values(0)(_))
+      val rows = Seq.newBuilder[Row]
+      for ((key, idx) <- groups) {
+        val n = idx.foldLeft(0L)(_ + cnt(_))
+        val ranks = targets.map(q => math.ceil(q * n).toLong)
+        val found = Array.fill(targets.length)(false)
+        rankWalk(v, idx, cnt) { (i, cum) =>
+          for (k <- targets.indices if !found(k) && cum(0) >= ranks(k)) {
+            found(k) = true
+            val row = Seq[Any](targets(k), ranks(k), v(i))
+            rows += Row.fromSeq(if (grouped) key +: row else row)
+          }
+        }
+      }
+      val fields = Seq(StructField("q", DoubleType, nullable = false),
+        StructField("target_rank", LongType), StructField("v", DoubleType))
+      Some(local(spark, rows.result(),
+        if (grouped) c.schema.fields(0) +: fields else fields))
+    }
+  }
+
+  /** The driver tier's one rank walk: visits the rows `idx` in
+    * ascending `v` (Spark's double order: NaN last), handing each row
+    * the inclusive cumulative sums of `counts` up to and including it. */
+  private def rankWalk(v: Array[Double], idx: Seq[Int],
+      counts: Array[Long]*)(visit: (Int, Array[Long]) => Unit): Unit = {
+    val cum = new Array[Long](counts.length)
+    for (i <- idx.sortBy(v(_))(Ordering.Double.TotalOrdering)) {
+      for (k <- counts.indices) cum(k) += counts(k)(i)
+      visit(i, cum)
+    }
+  }
+
+  /** The driver tier's local result frame. */
+  private def local(spark: SparkSession, rows: Seq[Row],
+      fields: Seq[StructField]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(fields))
 
   /** Mergeable CATEGORY counts — the categorical sibling of
     * [[valueCounts]] (same sum-merge lifecycle, string keys).
@@ -309,9 +395,14 @@ object Drift {
   }
 
   /** Shared KS reduction over the (v, ca, cb) table. */
-  private def ksReduce(byV0: DataFrame, nBlocks: Int): DataFrame = {
+  private def ksReduce(byV: DataFrame, nBlocks: Int): DataFrame = {
     require(nBlocks > 0, "nBlocks must be > 0")
-    val byV = graft.plans.Fence.bounded(byV0)
+    Fence.tiered(byV, "ks_counts")(ksInDriver(byV.sparkSession, _))(
+      ksPlan(_, nBlocks))
+  }
+
+  /** [[ksReduce]]'s corpus tier over the staged (v, ca, cb) table. */
+  private def ksPlan(byV: DataFrame, nBlocks: Int): DataFrame = {
     val bounds = byV.agg(min("v").as("lo"), max("v").as("hi"),
       sum("ca").as("na"), sum("cb").as("nb"))
     val blocked = byV.crossJoin(broadcast(bounds))
@@ -338,4 +429,29 @@ object Drift {
         col("nb").cast("long").as("n_b"),
         (floor(col("d") * 1e6 + 0.5) / 1e6).as("ks"))
   }
+
+  /** [[ksReduce]]'s driver tier: the rank walk's cumulative counts give
+    * D = max |cca/na − ccb/nb| in the plan's double arithmetic and
+    * rounding. Declines (the corpus tier answers instead) a null, column
+    * types the walk does not read, and an empty side, where the plan's
+    * division by zero raises under ANSI and is null otherwise. */
+  private def ksInDriver(spark: SparkSession, c: Fence.Columns)
+      : Option[DataFrame] =
+    if (c.hasNull ||
+        !c.schema.fields.map(_.dataType).sameElements(
+          Seq(DoubleType, LongType, LongType))) None
+    else {
+      val (v, ca, cb) = (c.doubles(0), c.longs(1), c.longs(2))
+      val (na, nb) = (ca.sum, cb.sum)
+      if (na == 0 || nb == 0) None
+      else {
+        var d = 0.0
+        rankWalk(v, v.indices, ca, cb) { (_, cum) =>
+          d = math.max(d, math.abs(cum(0).toDouble / na - cum(1).toDouble / nb))
+        }
+        Some(local(spark, Seq(Row(na, nb, math.floor(d * 1e6 + 0.5).toLong / 1e6)),
+          Seq(StructField("n_a", LongType), StructField("n_b", LongType),
+            StructField("ks", DoubleType))))
+      }
+    }
 }

@@ -186,8 +186,10 @@ object Eval {
     val counts = base.groupBy("s").agg(count(lit(1)).as("cnt"))
       .withColumnRenamed("s", "v") // quantilesFromCounts' (v, cnt) shape
     val qs = (1 until buckets).map(_.toDouble / buckets)
+    // |qs| rows, ordered in the driver (a distributed ORDER BY of them
+    // is a sampling job plus a shuffle job)
     val cuts = graft.operators.Drift.quantilesFromCounts(counts, qs)
-      .orderBy("q").collect().map(_.getAs[Double]("v")).toSeq
+      .collect().sortBy(_.getAs[Double]("q")).map(_.getAs[Double]("v")).toSeq
     val band = lit(buckets) -
       cuts.map(c => when(col("s") > lit(c), 1).otherwise(0))
         .reduce(_ + _)

@@ -52,11 +52,13 @@ object Rfm {
         lit("f"), col("frequency").cast("double"),
         lit("m"), col("monetary_c").cast("double"))).as(Seq("g", "v")))
       .groupBy("g", "v").agg(count(lit(1)).as("cnt"))
+    // |dims|·|qs| rows, ordered in the driver: a distributed ORDER BY of
+    // them is a sampling job plus a shuffle job
     val cutRows = Drift.quantilesFromCountsBy(
-      counts3, Seq(0.2, 0.4, 0.6, 0.8))
-      .orderBy("g", "q").collect()
+      counts3, Seq(0.2, 0.4, 0.6, 0.8)).collect()
     def cutsOf(dim: String): Seq[Double] = cutRows.toSeq
       .filter(_.getAs[String]("g") == dim)
+      .sortBy(_.getAs[Double]("q"))
       .map(_.getAs[Double]("v"))
     val rc = cutsOf("r")
     val fc = cutsOf("f")

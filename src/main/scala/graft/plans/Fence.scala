@@ -1,6 +1,9 @@
 package graft.plans
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
 
 /** THE fence-policy chokepoint: every multi-consumer / iterative
   * barrier in `src/main` routes through here, and the choice of fence
@@ -29,11 +32,15 @@ import org.apache.spark.sql.DataFrame
   *
   * When a frame's tier is only known once it is written, the same rule
   * is asked of the stage: [[driverBounded]] answers whether a staged
-  * frame is small enough to collect (a fixed 10 MB of parquet). Its
-  * one caller is `Dedup.connectedComponents`, which stages its
-  * symmetric edge list with [[corpusBucketed]] and then runs
-  * union-find in the driver when the stage is driver-bounded, HashMin
-  * rounds over the stage when it is not.
+  * frame is small enough to collect (a fixed 10 MB of parquet), and
+  * [[tiered]] is the one sequence that asks it — stage plainly, ask,
+  * then either collect and reclaim the stage or hand it to the corpus
+  * plan. Its callers are `Dedup.connectedComponents` (union-find in the
+  * driver, or HashMin rounds over a re-staged [[corpusBucketed]] edge
+  * list) and the three exact reductions of `Drift` — the quantiles of
+  * `quantilesFromCounts` and `quantilesFromCountsBy`, and the KS
+  * statistic (a rank walk in the driver, or the block prefix-sum plan
+  * over the stage).
   */
 object Fence {
 
@@ -71,6 +78,71 @@ object Fence {
   def driverBounded(staged: DataFrame): Boolean = {
     val bytes = Stage.stagedBytes(staged)
     bytes >= 0 && bytes <= driverBoundBytes.value
+  }
+
+  /** The two size tiers of a frame whose size is known only once it is
+    * written. `df` is staged plainly ([[corpus]], named `name`) and
+    * [[driverBounded]] is asked about the stage:
+    *  - driver-bounded: ONE job collects the stage as one array per
+    *    column ([[Columns]]), the stage is reclaimed and `driverTier`
+    *    computes the result in the driver;
+    *  - otherwise `corpusTier` runs over the stage.
+    * `driverTier` may decline (None) an input it would not answer
+    * exactly as the corpus tier does (a null, a zero divisor); the
+    * corpus tier then runs over the same stage, which it keeps. A
+    * streaming frame cannot be staged, so `corpusTier` gets it as is. */
+  def tiered[A](df: DataFrame, name: String)(
+      driverTier: Columns => Option[A])(corpusTier: DataFrame => A): A =
+    if (df.isStreaming) corpusTier(df)
+    else {
+      val staged = corpus(df, name)
+      val local =
+        if (driverBounded(staged)) driverTier(Columns.collect(staged))
+        else None
+      local match {
+        case Some(a) => reclaim(staged); a
+        case None => corpusTier(staged)
+      }
+    }
+
+  /** A driver-bounded stage collected by [[tiered]]: column `i` of the
+    * stage as one array, primitive for long and double columns
+    * ([[longs]], [[doubles]]) and boxed otherwise ([[values]]). A null
+    * reads 0 in a primitive array and sets [[hasNull]]. */
+  final class Columns private (val schema: StructType,
+      cols: Array[AnyRef], val hasNull: Boolean) {
+    def longs(i: Int): Array[Long] = cols(i).asInstanceOf[Array[Long]]
+    def doubles(i: Int): Array[Double] = cols(i).asInstanceOf[Array[Double]]
+    def values(i: Int): Array[Any] = cols(i).asInstanceOf[Array[Any]]
+  }
+
+  private object Columns {
+    def collect(staged: DataFrame): Columns = {
+      val types = staged.schema.fields.map(_.dataType)
+      // ONE job; each partition ships one array per column, not its Rows
+      val parts = staged.rdd.mapPartitions { it =>
+        val rows = it.toArray
+        val cols = types.indices.map[AnyRef] { i =>
+          types(i) match {
+            case LongType => rows.map(r => if (r.isNullAt(i)) 0L else r.getLong(i))
+            case DoubleType =>
+              rows.map(r => if (r.isNullAt(i)) 0.0 else r.getDouble(i))
+            case _ => rows.map(r => r.get(i): Any)
+          }
+        }.toArray
+        Iterator((cols, rows.exists(_.anyNull)))
+      }.collect()
+      def cat[T: ClassTag](i: Int): Array[T] =
+        Array.concat(parts.map(_._1(i).asInstanceOf[Array[T]]).toIndexedSeq: _*)
+      val cols = types.indices.map[AnyRef] { i =>
+        types(i) match {
+          case LongType => cat[Long](i)
+          case DoubleType => cat[Double](i)
+          case _ => cat[Any](i)
+        }
+      }.toArray
+      new Columns(staged.schema, cols, parts.exists(_._2))
+    }
   }
 
   /** The driver bound in bytes. Tests lower it for one block with

@@ -11,7 +11,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Durable stage materialization — the WET-file semantics, and the
   * writer behind the corpus tier of [[Fence]]: code outside
   * `graft.plans` fences through [[Fence.corpus]] /
-  * [[Fence.corpusBucketed]], never by calling this object directly.
+  * [[Fence.corpusBucketed]] / [[Fence.tiered]], never by calling this
+  * object directly.
   *
   * A multi-stage curation chain (HTML extraction → quality gate →
   * dedup) needs a barrier after the expensive per-row extraction so
@@ -147,7 +148,9 @@ object Stage {
     val spark = df.sparkSession
     val path = s"${stageRoot(spark)}/${name}_${seq.incrementAndGet()}"
     df.write.mode("overwrite").parquet(path)
-    val back = spark.read.parquet(path)
+    // the written frame's schema: a read that infers it runs a job just
+    // to read one footer
+    val back = spark.read.schema(df.schema).parquet(path)
     stagedFrames.put(back, (path, None))
     back
   }

@@ -3464,15 +3464,9 @@ class InfraSpec extends SparkTestBase {
     }
   }
 
-  test("connectedComponents driver tier: a driver-bounded edge stage is " +
-    "collected once and solved in the driver — no cc_labels stage, the " +
-    "cc_sym stage reclaimed before the call returns, a pinned job count") {
+  /** `body`'s result and the number of Spark jobs it started. */
+  private def withJobCount[A](body: => A): (A, Int) = {
     import org.apache.spark.TestBus
-    import graft.operators.Dedup
-    val chain = spark.range(0, 12).toDF("a") // diameter 12
-      .select(col("a"), (col("a") + 1).as("b"))
-    val symBefore = stageDirs("cc_sym_")
-    val labBefore = stageDirs("cc_labels_")
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val counter = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -3482,21 +3476,70 @@ class InfraSpec extends SparkTestBase {
     }
     TestBus.drain(spark.sparkContext)
     spark.sparkContext.addSparkListener(counter)
-    val r = try Dedup.connectedComponents(chain, maxIter = 20)
+    val a = try body
     finally {
       TestBus.drain(spark.sparkContext)
       spark.sparkContext.removeSparkListener(counter)
     }
+    (a, jobs.get)
+  }
+
+  test("connectedComponents driver tier: a driver-bounded edge stage is " +
+    "collected once and solved in the driver — no cc_labels stage, the " +
+    "cc_sym stage reclaimed before the call returns, a pinned job count") {
+    import graft.operators.Dedup
+    val chain = spark.range(0, 12).toDF("a") // diameter 12
+      .select(col("a"), (col("a") + 1).as("b"))
+    val symBefore = stageDirs("cc_sym_")
+    val labBefore = stageDirs("cc_labels_")
+    val (r, jobs) = withJobCount(Dedup.connectedComponents(chain, maxIter = 20))
     assert(stageDirs("cc_labels_") == labBefore,
       "the driver tier wrote a cc_labels stage")
     assert(stageDirs("cc_sym_") == symBefore,
       "the cc_sym stage outlived the call")
-    // the cc_sym write (a shuffle job and a write job under AQE) and
-    // the one collect; the corpus tier of the same call ran 43 jobs up
-    // to and including its result's collect
-    assert(jobs.get == 3, s"driver tier ran ${jobs.get} jobs")
+    // the plain cc_sym write and the one collect; the corpus tier of the
+    // same call ran 43 jobs up to and including its result's collect
+    assert(jobs == 2, s"driver tier ran $jobs jobs")
     assert(r.collect().map(x => (x.getLong(0), x.getLong(1))).sorted.toSeq ==
       (0L to 12L).map((_, 0L)))
+  }
+
+  test("Stage.materializeUnique reads its write back with the written " +
+    "schema: nested, array, map, timestamp, decimal, binary and " +
+    "non-nullable columns read back as a schema-inferring read sees " +
+    "them, with the same rows, and the read starts no job") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("s", StructType(Seq(
+        StructField("x", IntegerType, nullable = false),
+        StructField("y", StringType))), nullable = false),
+      StructField("arr", ArrayType(DoubleType, containsNull = false)),
+      StructField("m", MapType(StringType, LongType,
+        valueContainsNull = false)),
+      StructField("ts", TimestampType),
+      StructField("dec", DecimalType(12, 3)),
+      StructField("bin", BinaryType)))
+    val df = spark.createDataFrame(java.util.Arrays.asList(
+      Row(1L, Row(1, "a"), Seq(1.5, 2.5), Map("k" -> 3L),
+        Timestamp.valueOf("2024-01-02 03:04:05.123456"),
+        new java.math.BigDecimal("123.456"), Array[Byte](1, 2, 3)),
+      Row(2L, Row(2, null), Seq.empty[Double], Map.empty[String, Long],
+        null, null, null)), schema)
+    val (staged, stageJobs) =
+      withJobCount(graft.plans.Stage.materializeUnique(df, "readback"))
+    val plain = Files.createTempDirectory("readback").resolve("p").toString
+    val (_, writeJobs) = withJobCount(df.write.parquet(plain))
+    assert(stageJobs == writeJobs,
+      s"the stage ran $stageJobs jobs, its write alone $writeJobs")
+    val dir = new org.apache.hadoop.fs.Path(staged.inputFiles.head)
+      .getParent.toString
+    val inferred = spark.read.parquet(dir)
+    assert(staged.schema == inferred.schema)
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.orderBy("id").collect().toSeq
+    assert(rows(staged) == rows(df) && rows(inferred) == rows(df))
   }
 
   /** (path under src/main/scala/graft, body) for every main source. */

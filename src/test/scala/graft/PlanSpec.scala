@@ -323,31 +323,47 @@ class PlanSpec extends SparkTestBase {
       "qC4_gated_pack" -> 1, "qD7_heavy_hitters" -> 1,
       "qD9_negative_sample" -> 1, "qE9_sorted_neighborhood" -> 2,
       "qF1_er_chain" -> 2, "qH3_binary_auc" -> 1, "qH8_pr_curve" -> 1,
-      "qJ0_ks_drift" -> 1, "qJ5_cusum" -> 2, "qK6_zipf_slope" -> 1,
+      "qJ5_cusum" -> 2, "qK6_zipf_slope" -> 1,
       // qK7 r19: both |days|-bounded windows (day-rank + the mean fold
       // order) now run INSIDE the eager bounded fence of the deviation
       // frame (Trend.acfDaily), so the censused final plan no longer
       // carries them — the windows themselves are unchanged and still
       // aggregate-bounded (OPTIMIZATION_r19.md §2.4 sweep)
-      "qL3_quantiles_merged" -> 1, "qL9_gini" -> 1,
+      "qL9_gini" -> 1,
       "qL4_fellegi_sunter" -> 2, "qM2_sprt" -> 3,
       // qM9 r18: the side-tagged grouped quantile pass partitions both
       // prefix-sum windows by the side tag — the 2 global windows the
       // r15 census pinned are GONE (OPTIMIZATION_r18.md §4)
       "qN0_conformal" -> 1, "qN1_fs_patterns" -> 2, "qO6_lift_table" -> 1)
-    val census = SparkEntry.allQueries.flatMap { q =>
-      val n = q.run(spark, sf).queryExecution.sparkPlan.collect {
+    // the Drift reductions' corpus tier: the block prefix-sum plans keep
+    // their one global block-offset window (qM9's windows are partitioned
+    // by the side tag, so it has none); on the driver tier, which the
+    // census above plans, the reduction ran in the driver and left none
+    val corpusTierQueries =
+      Set("qJ0_ks_drift", "qL3_quantiles_merged", "qM9_qq_table")
+    val corpusTierPinned =
+      Map("qJ0_ks_drift" -> 1, "qL3_quantiles_merged" -> 1)
+    def windows(q: GraftQuery): Int =
+      q.run(spark, sf).queryExecution.sparkPlan.collect {
         case w: WindowExec if w.partitionSpec.isEmpty => w
         case w: WindowGroupLimitExec if w.partitionSpec.isEmpty => w
       }.size
-      if (n > 0) Some(q.name -> n) else None
-    }.toMap
-    val drift = (census.keySet ++ pinned.keySet).toSeq.sorted.flatMap { k =>
-      (census.getOrElse(k, 0), pinned.getOrElse(k, 0)) match {
-        case (c, p) if c == p => None
-        case (c, p) => Some(s"$k: planned $c empty-partition windows, pinned $p")
+    val census = SparkEntry.allQueries.map(q => q.name -> windows(q))
+      .filter(_._2 > 0).toMap
+    val corpusCensus = SparkEntry.allQueries
+      .filter(q => corpusTierQueries(q.name))
+      .map(q => q.name -> onCorpusTier(windows(q))).filter(_._2 > 0).toMap
+    def drifted(census: Map[String, Int], pinned: Map[String, Int],
+        tier: String): Seq[String] =
+      (census.keySet ++ pinned.keySet).toSeq.sorted.flatMap { k =>
+        (census.getOrElse(k, 0), pinned.getOrElse(k, 0)) match {
+          case (c, p) if c == p => None
+          case (c, p) => Some(s"$k: planned $c empty-partition windows, " +
+            s"pinned $p ($tier)")
+        }
       }
-    }
+    val drift = drifted(census, pinned, "driver tier") ++
+      drifted(corpusCensus, corpusTierPinned, "corpus tier")
     assert(drift.isEmpty,
       s"empty-partition window census drifted:\n${drift.mkString("\n")}")
   }
@@ -390,13 +406,17 @@ class PlanSpec extends SparkTestBase {
       "qH9_dhash_pairs" -> 4,  // band shuffle pair + dedup + order
       "qI2_audio_fp_pairs" -> 4, // same banded shape as qH9
       "qH3_binary_auc" -> 11, // score partials + block offsets frames
-      "qJ0_ks_drift" -> 12,   // tagged-union partials + offsets frames
+      // qJ0, qM9, qL3: the Drift reduction runs in the driver on a
+      // driver-bounded count stage, so the declared plan is the
+      // reduction's local result plus the query's own tail; the
+      // corpus-tier pins below audit the block prefix-sum plans
+      "qJ0_ks_drift" -> 0,    // the local (n_a, n_b, ks) row
       // round-7 heavies (audited this round; every exchange carries a
       // bounded frame — value-count/block-offset tables, daily frames,
       // |R×C| grids, candidate blocks — never the raw corpus):
-      "qM9_qq_table" -> 30,        // 2× quantile block prefix sums
+      "qM9_qq_table" -> 2,         // the per-q pivot + order
       "qN0_conformal" -> 24,       // means + residual-rank prefix sum
-      "qL3_quantiles_merged" -> 20, // 2 half-counts + merge + prefix sum
+      "qL3_quantiles_merged" -> 1, // the order over the local result
       "qK7_acf" -> 17,             // daily frame + lag equi-join legs
       // qM4 re-audited round 12: labelPropStep fences its undirected
       // edge set (the prefix pair generation previously executed TWICE
@@ -461,12 +481,23 @@ class PlanSpec extends SparkTestBase {
       // side => join removable), exactly the plan a stacked view
       // lineage should cost
       "qS4_standard_lineage_view" -> 1)
-    val failures = pins.flatMap { case (name, cap) =>
-      val p = planOf(name)
+    // the Drift reductions' corpus tier (a count stage above the 10 MB
+    // driver bound), planned over the same data under onCorpusTier
+    val corpusTierPins: Seq[(String, Int)] = Seq(
+      "qJ0_ks_drift" -> 12,   // tagged-union partials + offsets frames
+      "qM9_qq_table" -> 30,   // 2× quantile block prefix sums
+      "qL3_quantiles_merged" -> 20) // 2 half-counts + merge + prefix sum
+    def over(name: String, cap: Int, tier: String)(p: String)
+        : Option[String] = {
       val n = "Exchange ".r.findAllIn(p).length -
         "ReusedExchange ".r.findAllIn(p).length
-      if (n > cap) Some(s"$name: $n exchanges (pinned <= $cap)") else None
+      if (n > cap) Some(s"$name: $n exchanges (pinned <= $cap$tier)")
+      else None
     }
+    val failures =
+      pins.flatMap { case (name, cap) => over(name, cap, "")(planOf(name)) } ++
+        corpusTierPins.flatMap { case (name, cap) =>
+          over(name, cap, ", corpus tier")(onCorpusTier(planOf(name))) }
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 

@@ -722,4 +722,128 @@ class PropertySpec extends SparkTestBase {
         s"driver tier vs reference, random-order sample $i")
     }
   }
+
+  /** A random (v, cnt) count table: values from a domain of 1-6 (ties
+    * across rows and a single distinct value are common), counts 0-5,
+    * 0-30 rows, duplicate v rows included. */
+  private val countTableGen: Gen[Seq[(Double, Long)]] = for {
+    domain <- Gen.choose(1, 6)
+    n <- Gen.choose(0, 30)
+    rows <- Gen.listOfN(n, for {
+      v <- Gen.choose(0, domain - 1)
+      c <- Gen.choose(0L, 5L)
+    } yield (v * 1.5 - 2.0, c))
+  } yield rows
+
+  /** Lower-rank quantiles of a (v, cnt) table, plain Scala: the first
+    * value in ascending order whose cumulative count reaches
+    * ceil(q·n). */
+  private def quantileRef(t: Seq[(Double, Long)], qs: Seq[Double])
+      : Seq[(Double, Long, Double)] = {
+    val n = t.map(_._2).sum
+    val cum = t.sortBy(_._1).scanLeft((0.0, 0L)) { case ((_, c), (v, k)) =>
+      (v, c + k) }.tail
+    qs.distinct.sorted.flatMap { q =>
+      val target = math.ceil(q * n).toLong
+      cum.find(_._2 >= target).map(x => (q, target, x._1))
+    }
+  }
+
+  /** Two-sample KS of two (v, cnt) tables, plain Scala, rounded to 6 dp
+    * as the reduction rounds it. */
+  private def ksRef(a: Seq[(Double, Long)], b: Seq[(Double, Long)])
+      : (Long, Long, Double) = {
+    val (na, nb) = (a.map(_._2).sum, b.map(_._2).sum)
+    val d = (a ++ b).map(_._1).distinct.map { x =>
+      math.abs(a.filter(_._1 <= x).map(_._2).sum.toDouble / na -
+        b.filter(_._1 <= x).map(_._2).sum.toDouble / nb)
+    }.max
+    (na, nb, math.floor(d * 1e6 + 0.5).toLong / 1e6)
+  }
+
+  test("Drift quantiles and KS: the driver tier, the corpus tier and a " +
+    "plain-Scala reference agree on random count tables (ties, one " +
+    "distinct value, q = 1.0, duplicate values, zero counts, several " +
+    "groups, an empty KS side), and the driver tier throws wherever the " +
+    "corpus tier does") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import graft.operators.Drift
+    def isLocal(df: DataFrame): Boolean =
+      df.queryExecution.analyzed.isInstanceOf[LocalRelation]
+    def sorted(df: DataFrame): Seq[Row] =
+      df.collect().toSeq.sortBy(_.toString)
+    /** Both tiers of `reduce`; the driver tier was taken when `local`,
+      * equal schemas and rows, or both throw. */
+    def tiers(what: String, local: Boolean)(reduce: => DataFrame)
+        : Option[Seq[Row]] = {
+      val driver = scala.util.Try { val d = reduce; (d, sorted(d)) }
+      val corpus = scala.util.Try(onCorpusTier {
+        val c = reduce; (c, sorted(c)) })
+      assert(driver.isFailure == corpus.isFailure,
+        s"$what: driver tier $driver, corpus tier $corpus")
+      corpus.toOption.map { case (c, rows) =>
+        val (d, drows) = driver.get
+        assert(isLocal(d) == local, s"$what: driver tier taken ${isLocal(d)}")
+        assert(!isLocal(c), s"$what: corpus tier ran in the driver")
+        assert(d.schema == c.schema, s"$what: ${d.schema} vs ${c.schema}")
+        assert(drows == rows, s"$what: driver vs corpus tier")
+        rows
+      }
+    }
+    val qsGen = Gen.listOfN(3, Gen.choose(1, 100)).map(_.map(_ / 100.0) :+ 1.0)
+    val cases = samples(for {
+      t <- countTableGen
+      u <- countTableGen
+      w <- countTableGen
+      qs <- qsGen
+    } yield (t, u, w, qs), 12)
+    for (((t, u, w, qs), i) <- cases.zipWithIndex) {
+      val nb = i % 4 + 1 // block counts 1-4: values share blocks
+      // quantilesFromCounts
+      val got = tiers(s"quantiles $i", local = true) {
+        Drift.quantilesFromCounts(t.toDF("v", "cnt"), qs, nBlocks = nb) }
+      assert(got.get.map(r => (r.getDouble(0), r.getLong(1), r.getDouble(2)))
+        .sortBy(_._1) == quantileRef(t, qs), s"quantiles $i vs reference")
+      // quantilesFromCountsBy: three groups, one of them possibly empty
+      val groups = Seq("a" -> t, "b" -> u, "c" -> w)
+      val tagged = groups.flatMap { case (g, rows) =>
+        rows.map { case (v, c) => (g, v, c) } }.toDF("g", "v", "cnt")
+      val byGot = tiers(s"grouped quantiles $i", local = true) {
+        Drift.quantilesFromCountsBy(tagged, qs, nBlocks = nb) }
+      assert(byGot.get.map(r => (r.getString(0), r.getDouble(1),
+          r.getLong(2), r.getDouble(3))).sortBy(x => (x._1, x._2)) ==
+        groups.flatMap { case (g, rows) => quantileRef(rows, qs)
+          .map { case (q, k, v) => (g, q, k, v) } }, s"grouped $i vs reference")
+      // ksFromCounts: an empty or all-zero side divides by zero, which
+      // both tiers must raise (ANSI) or answer alike
+      val ksLocal = t.map(_._2).sum != 0 && u.map(_._2).sum != 0
+      tiers(s"ksFromCounts $i", ksLocal) {
+        Drift.ksFromCounts(t.toDF("v", "cnt"), u.toDF("v", "cnt"), nb)
+      }.filter(_ => ksLocal).foreach { rows =>
+        val r = rows.head
+        assert((r.getLong(0), r.getLong(1), r.getDouble(2)) == ksRef(t, u),
+          s"ksFromCounts $i vs reference")
+      }
+      // ksStatistic over raw values: every (v, cnt) row is cnt values
+      val (ra, rb) = (t.flatMap { case (v, c) => Seq.fill(c.toInt)(v) },
+        u.flatMap { case (v, c) => Seq.fill(c.toInt)(v) })
+      tiers(s"ksStatistic $i", ra.nonEmpty && rb.nonEmpty) {
+        Drift.ksStatistic(ra.toDF("x"), rb.toDF("x"), col("x"), nb)
+      }.filter(_ => ra.nonEmpty && rb.nonEmpty).foreach { rows =>
+        val r = rows.head
+        assert((r.getLong(0), r.getLong(1), r.getDouble(2)) == ksRef(t, u),
+          s"ksStatistic $i vs reference")
+      }
+    }
+    // the empty side, pinned: KS against nothing raises in both tiers
+    // under ANSI, and with an empty table neither tier has a quantile
+    val empty = Seq.empty[(Double, Long)].toDF("v", "cnt")
+    val one = Seq((1.0, 2L)).toDF("v", "cnt")
+    assert(tiers("ks vs empty", local = false) {
+      Drift.ksFromCounts(one, empty) }.isEmpty == spark.conf
+      .get("spark.sql.ansi.enabled").toBoolean)
+    assert(tiers("quantiles of empty", local = true) {
+      Drift.quantilesFromCounts(empty, Seq(0.5, 1.0)) }.contains(Seq.empty))
+  }
 }

@@ -36,8 +36,9 @@ abstract class SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.spark
 
   /** Run `body` with the driver bound of `Fence.driverBounded` at -1,
-    * so no staged frame is driver-bounded and
-    * `Dedup.connectedComponents` takes its corpus (HashMin) tier. */
+    * so no staged frame is driver-bounded and every `Fence.tiered`
+    * caller takes its corpus tier (`Dedup.connectedComponents` its
+    * HashMin rounds, the `Drift` reductions their prefix-sum plans). */
   protected def onCorpusTier[A](body: => A): A =
     graft.plans.Fence.driverBoundBytes.withValue(-1L)(body)
 }
